@@ -1,21 +1,21 @@
 #!/bin/bash
-# Capture .explain("formatted") for all queries into plans/<tag>/<q>_<suffix>.txt
-# Usage: capture_plans.sh <tag> <suffix>   (e.g. capture_plans.sh r14 before)
+# Capture each query's final (post-AQE) formatted plan, run under the bench's
+# session conf, into plans/<tag>/<query>_<suffix>.txt
+# Usage: capture_plans.sh <tag> <suffix> <corpusDir> [query...]
+#   e.g. capture_plans.sh r14 after <testdata>/sf0.01
 set -e
 cd "$(dirname "$0")/.."
-TAG=${1:?tag}; SUF=${2:?suffix}
+TAG=${1:?tag}; SUF=${2:?suffix}; DIR=${3:?corpus dir}; shift 3
 mkdir -p "plans/$TAG"
-sbt -batch "runMain graft.Probe" 2>/dev/null > "/tmp/plans_${TAG}_${SUF}.txt"
-python3 - "$TAG" "$SUF" <<'EOF'
-import sys, os, re
-tag, suf = sys.argv[1], sys.argv[2]
-text = open(f"/tmp/plans_{tag}_{suf}.txt").read()
-parts = re.split(r"^===== (\S+) =====$", text, flags=re.M)
-n = 0
+OUT=$(mktemp)
+sbt -batch "runMain graft.Tool plans $DIR $*" 2>/dev/null > "$OUT"
+python3 - "$TAG" "$SUF" "$OUT" <<'PY'
+import sys, re
+tag, suf, out = sys.argv[1:]
+parts = re.split(r"^===== plan (\S+) =====$", open(out).read(), flags=re.M)
 for i in range(1, len(parts), 2):
-    name, body = parts[i], parts[i+1]
-    with open(f"plans/{tag}/{name}_{suf}.txt", "w") as f:
-        f.write(body.strip() + "\n")
-    n += 1
-print(f"wrote {n} plans/{tag}/*_{suf}.txt")
-EOF
+    with open(f"plans/{tag}/{parts[i]}_{suf}.txt", "w") as f:
+        f.write(parts[i + 1].strip() + "\n")
+print(f"wrote {len(parts) // 2} plans/{tag}/*_{suf}.txt")
+PY
+rm -f "$OUT"

@@ -2,15 +2,19 @@
 """Local stand-in for the driver's DuckDB-oracle compare.
 
 Usage: check_oracle.py <sf_dir> <verify_out_dir> [timeout_s]
+       check_oracle.py --compare <verify_out_a> <verify_out_b>
        check_oracle.py --selftest
 Reads each <name>/ parquet dir written by graft.Verify plus oracle_sql.json,
 runs the oracle SQL in DuckDB over the same tables, sorts columns by name and
 rows by all values, and diffs. Prints PASS/FAIL per query. The optional
 per-query timeout interrupts a pathological oracle replay (large-SF probes)
 and records ORACLE-TIMEOUT instead of hanging the sweep.
+
+--compare needs no DuckDB: it diffs two graft.Verify dumps query by query
+under the same canonical form (columns by name, values stringified, rows
+sorted), printing each result's content hash, plus oracle_sql.json.
 """
-import sys, os, json, glob, threading
-import duckdb
+import sys, os, json, glob, hashlib, threading
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -37,6 +41,7 @@ CONTRACTS = {
 }
 
 def connect(sf_dir):
+    import duckdb
     con = duckdb.connect()
     # DuckDB's default memory_limit is 80% of RAM; alongside a residual
     # Spark JVM that invites the OS OOM-killer (observed: exit 137 on the
@@ -101,6 +106,7 @@ def run_oracle(con, sql, timeout, reconnect):
 def selftest():
     """Deliberate-timeout exercise: a slow query must record a timeout and
     the NEXT query on the (rebuilt) connection must run unpoisoned."""
+    import duckdb
     con = duckdb.connect()
     slow = ("SELECT count(*) FROM range(100000000) a, range(100000) b "
             "WHERE (a.range * b.range) % 1000003 = 7")
@@ -126,18 +132,55 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
+def load(d):
+    files = glob.glob(f"{d}/*.parquet")
+    return pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
+
+def digest(df):
+    """Order-independent content hash: sha256 of the canonical form."""
+    return hashlib.sha256(canon(df).to_csv(index=False).encode()).hexdigest()[:16]
+
+def results(out_dir):
+    return {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
+
+def compare(dir_a, dir_b):
+    n_same = n_diff = 0
+    names_a, names_b = results(dir_a), results(dir_b)
+    for name in sorted(names_a | names_b):
+        if name not in names_a or name not in names_b:
+            print(f"{name}: DIFF only in {dir_a if name in names_a else dir_b}")
+            n_diff += 1
+            continue
+        a, b = load(os.path.join(dir_a, name)), load(os.path.join(dir_b, name))
+        ha, hb = digest(a), digest(b)
+        if ha == hb:
+            print(f"{name}: SAME {ha} ({len(a)} rows)")
+            n_same += 1
+        else:
+            print(f"{name}: DIFF {ha} ({len(a)} rows) vs {hb} ({len(b)} rows)")
+            n_diff += 1
+    oracles = [json.load(open(f"{d}/oracle_sql.json")) for d in (dir_a, dir_b)]
+    if oracles[0] != oracles[1]:
+        changed = sorted(k for k in oracles[0].keys() | oracles[1].keys()
+                         if oracles[0].get(k) != oracles[1].get(k))
+        print(f"oracle_sql.json: DIFF for {changed}")
+        n_diff += 1
+    print(f"== {n_same} same, {n_diff} differ")
+    sys.exit(1 if n_diff else 0)
+
 def main():
     if sys.argv[1:2] == ["--selftest"]:
         selftest()
+        return
+    if sys.argv[1:2] == ["--compare"]:
+        compare(sys.argv[2], sys.argv[3])
         return
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     timeout = float(sys.argv[3]) if len(sys.argv) > 3 else None
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    for name in sorted(results(out_dir)):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
         # FRESH connection per query: DuckDB's temp-storage file grows
         # with a query's spill and is not reclaimed while the connection
         # lives, so a PASSING spill-heavy replay can starve the NEXT
@@ -147,8 +190,7 @@ def main():
         # dropped its temp file). Closing the connection deletes its temp
         # files; re-registering 10 parquet views costs milliseconds.
         con = connect(sf_dir)
-        files = glob.glob(f"{d}/*.parquet")
-        got = pd.concat([pd.read_parquet(f) for f in files]) if files else pd.DataFrame()
+        got = load(d)
         if name not in oracles:
             c = CONTRACTS.get(name)
             if c is None:

@@ -113,7 +113,7 @@ object Bench {
   private def writeFullArtifact(
       results: Seq[(String, Double, Option[String])], sfDir: String,
       loadStart: String, loadEnd: String, requeried: Int,
-      tagOverride: Option[String], splitBytes: Long,
+      tagOverride: Option[String], splitBytes: Long, aqe: Boolean,
       gateJson: String, cpus: Int, warmSec: Map[String, Double]): Unit = {
     val sfTok = tagOverride.getOrElse(sfToken(sfDir))
     val baseline = LocalBaselineSec.get(sfTok).fold("") { b =>
@@ -141,6 +141,7 @@ object Bench {
          |$baseline  "load_1m_start": ${jstr(loadStart)},
          |  "load_1m_end": ${jstr(loadEnd)},
          |  "max_partition_bytes": $splitBytes,
+         |  "adaptive": $aqe,
          |  "load_gate": $gateJson,
          |  "requeried": $requeried,
          |  "queries": {
@@ -161,9 +162,7 @@ object Bench {
     // must never overwrite the full round history.
     val only = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val splitBytes = GraftConf.splitBytes(sfDir, cpus.toInt)
+    val cpus = GraftSession.cpus()
     // Quiet-host gate for ARTIFACT runs (full sweeps and tagged probes):
     // this host has noisy phases that swing totals ±25%, and an artifact
     // measured under external load poisons every round-over-round delta
@@ -211,31 +210,13 @@ object Bench {
     }
     val (gateLoad0, gateWaited0) =
       if (gateEnabled) gateWait() else (0.0, 0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // single-file corpus tables must fan out at sf10 without shredding
-      // tiny corpora — derived from corpus bytes (GraftConf
-      // .deriveSplitBytes), recorded in the committed artifact
-      .config("spark.sql.files.maxPartitionBytes", s"$splitBytes")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the generated-class cache defaults to 100 entries, and this
-      // engine's registered surface is 129 queries × ~5-10 codegen units
-      // each — a full sweep evicts EVERY entry between two evaluations of
-      // the same query, so every timed pass re-ran janino over the whole
-      // surface. Sizing the cache to the surface halved the sweep
-      // (39.96 s → 19.54 s at sf0.1); not core-count-dependent — any
-      // long-lived deployment of this query surface wants its plans'
-      // codegen resident.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .config(GraftConf.fromEnv())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sfDir)
+    // the conf that actually ran, read back from the built session:
+    // SPARK_GRAFT_CONF is applied last and may override the derived split
+    // or AQE, so the artifact must not record what was merely derived
+    val splitBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled").trim.toBoolean
     // noop write, NOT count(): under count() Catalyst prunes every column,
     // so projection-only queries (fingerprints, embeddings, token stats)
     // would skip their real work and report fictional times. The noop sink
@@ -324,7 +305,7 @@ object Bench {
     val benchTag = sys.env.get("SPARK_GRAFT_BENCH_TAG")
     if (only.isEmpty || benchTag.isDefined)
       writeFullArtifact(results, sfDir, loadStart, loadEnd, flaky.size,
-        benchTag, splitBytes, gateJson, cpus.toInt, warmSec)
+        benchTag, splitBytes, aqe, gateJson, cpus, warmSec)
     // the 2x-of-baseline criterion, against the pinned local wall (see
     // LocalBaselineSec / docs/BASELINE_LOCAL.md); prefixed so the tail
     // parser never matches it. Full sweeps only — a filtered run's

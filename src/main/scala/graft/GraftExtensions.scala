@@ -10,8 +10,9 @@ import graft.functions.{CosineSimilarity, HyperplaneBandSigs}
   * users get them by name (`SELECT cosine_sim(embedding, q) ...`,
   * `SELECT hyperplane_sigs(embedding, 0, 32, 4, 64) ...`).
   *
-  * Install with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * or `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * [[GraftSession]] installs it; any other session installs it with
+  * `spark.sql.extensions=graft.GraftExtensions` or
+  * `withExtensions(new GraftExtensions)` on its builder.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def intArg(e: Expression, name: String): Int = e match {

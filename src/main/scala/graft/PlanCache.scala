@@ -115,8 +115,8 @@ object PlanCache {
     if (e != null) { try e.df.unpersist() catch { case _: Throwable => () } }
   }
 
-  /** Unpersist and drop every entry. Global: only for dev tools
-    * (ScaleProbe) and teardown — a data change under ONE dir should use
+  /** Unpersist and drop every entry. Global: only for dev tools and
+    * teardown — a data change under ONE dir should use
     * the dir-scoped overload so live persisted relations of other dirs
     * and sessions sharing the JVM stay cached.
     */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 stress-corpus generator (dev tool, not part of the driver
@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * trailing one) and embeddings a per-(copy, dim) deterministic sign
   * flip so the near-dup/semantic structure stays sparse instead of
   * minting `copies`-way true-duplicate groups (which would grow
-  * quadratic pair counts no real corpus growth produces — same reasoning
-  * as ScaleProbe.synth). The earlier APPENDED-only marker failed that
-  * intent: one extra token leaves 3-gram Jaccard of a ~50-word doc at
+  * quadratic pair counts no real corpus growth produces). The earlier
+  * APPENDED-only marker failed that intent: one extra token leaves
+  * 3-gram Jaccard of a ~50-word doc at
   * ~0.93 ≫ τ=0.5, so 100 copies minted C(100,2)-pair cliques (24.8M
   * true pairs at sf10 — measured in round 8); interleaving changes ~3/4
   * of the shingles (cross-copy Jaccard ≈ 0.29, winnow 4-gram
@@ -53,6 +53,12 @@ import org.apache.spark.sql.functions._
   * `documents embeddings` instead of paying a 60M-row lineitem write).
   */
 object ScaleUp {
+
+  /** Rows are copied with their column types unchanged: timestamps read
+    * as timestamps (not nanos-as-long) and are never inferred as NTZ. */
+  private[graft] val SessionOverrides = Seq(
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "false")
 
   /** Per-copy key offset — far above any base key at these SFs. */
   private val Off = 100000000L
@@ -92,16 +98,7 @@ object ScaleUp {
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val skew = args.drop(3).contains("skew")
     val onlyTables = args.drop(3).filterNot(_ == "skew").toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(base, SessionOverrides: _*)
 
     def replicate(name: String, keyCols: Seq[String],
         perturb: (DataFrame, Int) => DataFrame = (d, _) => d,

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,7 @@ object Verify {
     // optional extra args: run only queries whose name contains one of them
     // (local iteration aid; the driver passes exactly two args)
     val only = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // single-file corpus tables must fan out at sf10 without shredding
-      // tiny corpora into per-task overhead — derived from corpus bytes,
-      // see GraftConf.deriveSplitBytes
-      .config("spark.sql.files.maxPartitionBytes",
-        s"${GraftConf.splitBytes(sfDir, cpus.toInt)}")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); Spark reads it as a long
-      // (nanos since epoch) under this flag — Tables.events normalizes.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // generated-class cache sized to the 129-query surface (see the
-      // Bench builder note; default 100 thrashes on a full sweep)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-      .config(GraftConf.fromEnv())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(sfDir)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.exists(name.contains) }

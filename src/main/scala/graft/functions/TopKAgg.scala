@@ -109,7 +109,7 @@ object TopKAgg {
     * groups — and the default is 128, sized for giant per-group state
     * like collect_list, not for k-bounded heaps. A batch-KNN top-k over
     * vector-count groups then SORTS every candidate-pair row (observed
-    * as the dominant aggregate cost in ScaleProbe `knn`).
+    * as the dominant aggregate cost in `graft.Tool knn`).
     *
     * The raise is SCOPED, not session-wide: [[posture]] re-binds the
     * operator's final plan to a memoized clone of the caller's session

@@ -202,9 +202,9 @@ object ChunkOps {
     branchSyncWith(spark, dir, rewriteMod = 5, dropMod = 7)
 
   /** [[branchSync]] with the churn knobs exposed (every `rewriteMod`-th
-    * doc rewritten, every `dropMod`-th deleted) — the ScaleProbe
-    * `branchsync` mode sweeps rewriteMod to measure that sync cost
-    * tracks churn while the full-re-chunk baseline stays corpus-sized. */
+    * doc rewritten, every `dropMod`-th deleted); docs/SCALE_NOTES.md
+    * records the sweep showing sync cost tracks churn while the
+    * full-re-chunk baseline stays corpus-sized. */
   private[graft] def branchSyncWith(spark: SparkSession, dir: String,
       rewriteMod: Int, dropMod: Int): DataFrame = {
     val docs = Tables.documents(spark, dir)

@@ -362,9 +362,6 @@ object DedupOps {
   /** Index of the FIRST [[SimhashBands]] band where the two 32-bit
     * signatures agree — computable from the xor alone, so the band rows
     * need no extra carried state for the first-match-band discipline. */
-  private[graft] def simhashFirstBandProbe(aSig: Column, bSig: Column): Column =
-    simhashFirstBand(aSig, bSig)
-
   private def simhashFirstBand(aSig: Column, bSig: Column): Column = {
     val x = aSig.bitwiseXOR(bSig)
     SimhashBands.zipWithIndex.foldRight(lit(-1L): Column) {
@@ -405,7 +402,7 @@ object DedupOps {
     * failure the Jaccard prefix filter defends against. Natural corpus max
     * df is 6 at sf0.1, so the cap changes nothing on real data; on a
     * corpus with one planted corpus-wide gram it bounds the join (see
-    * ScaleProbe's winnow measurement in docs/SCALE_NOTES.md). Capping is
+    * the winnow measurement in docs/SCALE_NOTES.md). Capping is
     * deliberately LOSSY for pairs whose entire shared sketch is hot
     * boilerplate — those are not near-dups of each other, they are dups of
     * the boilerplate. */

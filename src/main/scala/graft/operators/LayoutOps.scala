@@ -108,7 +108,7 @@ object LayoutOps {
   /** Per-shard skipping manifest over the z-ordered layout: row count +
     * min/max of BOTH dimensions (user_id, event-time µs) per 8-bit shard.
     * A reader prunes shards whose box misses the predicate rectangle;
-    * ScaleProbe.zorderProbe measures the win against a time-sorted
+    * docs/SCALE_NOTES.md records the win against a time-sorted
     * layout. */
   def layoutZorder(spark: SparkSession, dir: String): DataFrame =
     zValued(spark, dir)

@@ -462,7 +462,7 @@ object SearchOps {
 
   /** The scored-pair stage of [[vecKnnJoin]] with an EXPLICIT salt
     * factor — shared by the operator (salt from [[knnSaltFactor]]) and
-    * ScaleProbe's stage-attribution runs. Pairs are enumerated ONCE per
+    * the `graft.Tool knn` stage attribution. Pairs are enumerated ONCE per
     * unordered pair (a_id < b_id), scored once, and mirrored by
     * [[mirrorScored]] — half the dot products of the ordered-pair join
     * this replaced, same output. */

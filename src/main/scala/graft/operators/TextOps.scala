@@ -133,12 +133,8 @@ object TextOps {
     * array expression re-evaluates it per ELEMENT (20×), and nesting
     * zip_with stages into one expression duplicates the hash sub-tree
     * ~10× per row — both are moot now that each stage is one native
-    * expression over the previous aliased column. */
-  private[graft] def winnowed(df: DataFrame, text: Column): DataFrame =
-    winnowedToks(df.withColumn("_t", tokens(text)))
-
-  /** [[winnowed]] over a frame already carrying its token array as
-    * `_t` — the pre-tokenized index path skips the tokenizer pass. */
+    * expression over the previous aliased column. The input frame
+    * carries its token array as `_t`. */
   private[graft] def winnowedToks(df: DataFrame): DataFrame =
     df
       // 4-gram build is ONE native pass (NGramJoin) — byte-identical to

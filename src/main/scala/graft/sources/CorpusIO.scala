@@ -47,7 +47,7 @@ object CorpusIO {
     * own entries, preserving the no-overwrite property), and a JVM
     * shutdown hook removes everything written. Entries follow the SAME
     * invalidation protocol as persisted plans: a
-    * PlanCache.invalidate(dir) sweep (the watch loop's and ScaleProbe's
+    * PlanCache.invalidate(dir) sweep (the watch loop's
     * data-changed hook) deletes the copy, so a rewritten documents table
     * is re-serialized instead of read stale. No stopped-session
     * eviction: the shutdown hook needs the paths, and the map is bounded

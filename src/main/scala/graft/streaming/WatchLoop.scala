@@ -57,7 +57,7 @@ object WatchLoop {
       failedReloads: Long, lastDurationMs: Long, lastError: Option[String],
       currentEdgeCount: Long)
 
-  private val ledgers = new ConcurrentHashMap[(SparkSession, String),
+  private[graft] val ledgers = new ConcurrentHashMap[(SparkSession, String),
     java.util.Vector[ReloadRecord]]()
 
   /** The per-batch reload ledger for a (session, dir) watch loop, as a
@@ -66,18 +66,21 @@ object WatchLoop {
     * Empty when no loop has run. Driver-side state, never a Spark job:
     * the ledger is observability FOR the stream, not part of it. */
   def reloadLedger(spark: SparkSession, dir: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val s = spark
     import s.implicits._
-    Option(ledgers.get((spark, dir)))
-      .map(_.asScala.toSeq).getOrElse(Seq.empty[ReloadRecord]).toDF()
+    records(spark, dir).toDF()
   }
+
+  /** The ledger's rows, copied under the vector's own lock: the stream
+    * thread appends while callers read, and iterating the live vector
+    * fails fast with ConcurrentModificationException. */
+  private def records(spark: SparkSession, dir: String): Seq[ReloadRecord] =
+    Option(ledgers.get((spark, dir)))
+      .fold(Seq.empty[ReloadRecord])(_.toArray(new Array[ReloadRecord](0)).toSeq)
 
   /** Snapshot the ledger into the reference's metrics shape. */
   def metrics(spark: SparkSession, dir: String): ReloadSnapshot = {
-    import scala.jdk.CollectionConverters._
-    val recs = Option(ledgers.get((spark, dir)))
-      .map(_.asScala.toSeq).getOrElse(Nil)
+    val recs = records(spark, dir)
     ReloadSnapshot(
       totalReloads = recs.size.toLong,
       successfulReloads = recs.count(_.error.isEmpty).toLong,
@@ -155,6 +158,17 @@ object WatchLoop {
               fresh.write.mode("append").format("parquet").saveAsTable(tbl)
               totalEdges.addAndGet(n)
               appended = n
+              // The append ran in the stream's own session; the caller's
+              // session keeps the file listing it cached on first read, so
+              // memos it rebuilds after the invalidation below would miss
+              // these edges (and, matched by path, be served to any session
+              // reading the table). Own try, like the stash drop below:
+              // the append landed.
+              try spark.catalog.refreshTable(tbl)
+              catch { case scala.util.control.NonFatal(e) =>
+                Console.err.println(
+                  s"watch-loop: refreshing $tbl in the caller's session failed: $e")
+              }
               graft.PlanCache.invalidate(dir)
             }
           } finally { fresh.unpersist(); () }

@@ -7,25 +7,21 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs. */
 trait SparkFixture extends BeforeAndAfterAll { self: AnyFunSuite =>
-  lazy val spark: SparkSession = SparkFixture.session
+  lazy val spark: SparkSession = SparkFixture.session(SfDir)
   val SfDir = "/root/testdata/sf0.001"
   override def afterAll(): Unit = () // session shared across suites
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
+  /** The shared session, built by the factory every main uses; the test
+    * warehouse is the only setting that differs. */
+  private var shared: SparkSession = null
+
+  def session(dir: String): SparkSession = synchronized {
+    if (shared == null)
+      shared = GraftSession(dir, "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    shared
   }
 }
 
@@ -1955,22 +1951,6 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
   }
 }
 
-/** Salted join equivalence. */
-class SkewOpsSpec extends AnyFunSuite with SparkFixture {
-  test("salted join returns exactly the rows of the plain join") {
-    val big = Tables.orders(spark, SfDir)
-      .select(col("o_custkey").as("k"), col("o_orderkey"))
-    val small = Tables.customer(spark, SfDir)
-      .select(col("c_custkey").as("k"), col("c_mktsegment"))
-    val plain = big.join(small, "k")
-      .orderBy("k", "o_orderkey").collect().toSeq
-    val salted = operators.SkewOps.saltedJoin(big, small, "k", 8)
-      .select(col("k"), col("o_orderkey"), col("c_mktsegment"))
-      .orderBy("k", "o_orderkey").collect().toSeq
-    assert(salted == plain)
-  }
-}
-
 /** Bucketed index-store layout: co-located joins must be shuffle-free. */
 class IndexStoreSpec extends AnyFunSuite with SparkFixture {
   import graft.sources.IndexStore
@@ -2452,6 +2432,37 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       q.processAllAvailable()
       assert(spark.table(tbl).count() == rowsBefore,
         "a replayed existing edge must not append (no-op reload)")
+    } finally {
+      q.stop()
+      WatchLoop.stop(spark, SfDir)
+    }
+  }
+
+  test("watch loop: the caller's session reads an append made while no memo is live") {
+    // The append runs in the stream's own session, and the caller's
+    // session cached its listing of the table when the watch started.
+    // Spark refreshes that listing on its own only through a persisted
+    // plan over the table; here none is live when the append lands.
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.streaming.WatchLoop
+    import graft.operators.GraphOps
+    val mem = MemoryStream[(Long, Long)]
+    val q = WatchLoop.start(spark, SfDir, mem.toDF().toDF("src", "dst"))
+    val tbl = "graft_watch_edges" + SfDir.replaceAll("[^a-zA-Z0-9]", "_")
+    try {
+      val newPart = 777777L
+      val before = spark.table(tbl).count()
+      mem.addData((0L, newPart))
+      q.processAllAvailable()
+      assert(spark.table(tbl).count() == before + 1,
+        "the caller's listing of the edge table must include the append")
+      assert(GraphOps.kHop(spark, SfDir, 2).filter(col("hop") === 1)
+        .select("node_id").as[Long].collect().contains(newPart),
+        "a memo built after the reload must read the appended edge")
+      assert(spark.newSession().table(tbl).count() == before + 1,
+        "a fresh session must agree with the caller")
     } finally {
       q.stop()
       WatchLoop.stop(spark, SfDir)

@@ -148,7 +148,8 @@ class PropertySpec extends AnyFunSuite with SparkFixture {
       Seq((i.toLong * 2, s"${pre.mkString(" ")} $run ${post.mkString(" ")}"),
         (i.toLong * 2 + 1, s"${post.mkString(" ")} $run ${pre.mkString(" ")}"))
     }
-    val sel = operators.TextOps.winnowed(rows.toDF("doc_id", "text"), col("text"))
+    val sel = operators.TextOps.winnowedToks(rows.toDF("doc_id", "text")
+        .withColumn("_t", functions.Tokenize.tokens(col("text"))))
       .select(col("doc_id"), col("sel"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     pairs.indices.foreach { i =>

@@ -100,6 +100,37 @@ class WatchMetricsSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("metrics and the ledger read safely while a reload appends") {
+    // the stream thread appends one row per micro-batch while callers
+    // poll; a fail-fast iteration of the live ledger threw
+    // ConcurrentModificationException under exactly this interleaving
+    val dir = "concurrent-ledger"
+    val ledger = new java.util.Vector[WatchLoop.ReloadRecord]()
+    WatchLoop.ledgers.put((spark, dir), ledger)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val appender = new Thread(() => {
+      var i = 0L
+      while (!done.get()) {
+        i += 1
+        ledger.add(WatchLoop.ReloadRecord(i, 1L, 1L, i, None))
+        java.util.concurrent.locks.LockSupport.parkNanos(20000L)
+      }
+    })
+    try {
+      appender.start()
+      (1 to 2000).foreach { r =>
+        val m = WatchLoop.metrics(spark, dir)
+        assert(m.totalReloads == m.currentEdgeCount,
+          "one consistent snapshot: the last row matches the row count")
+        if (r % 100 == 0) WatchLoop.reloadLedger(spark, dir).count()
+      }
+    } finally {
+      done.set(true)
+      appender.join()
+      WatchLoop.ledgers.remove((spark, dir))
+    }
+  }
+
   test("batch twin: counters reconcile and both outcomes are covered") {
     val rows = operators.ChunkOps.watchReloadLog(spark, SfDir)
       .orderBy("reload_id").collect()
