@@ -1648,7 +1648,7 @@ object SparkEntry {
          |  FROM sv a JOIN sv b ON a.band = b.band AND a.label = b.label
          |    AND a.sig = b.sig AND a.vec_id < b.vec_id)
          |SELECT DISTINCT a_id, b_id, score FROM hits
-         |WHERE score >= 0.42""".stripMargin,
+         |WHERE score >= ${operators.DedupOps.EmbTau}""".stripMargin,
     "dedup_winnow" ->
       s"""WITH $duckWinnow,
          |s AS (SELECT doc_id, list_sort(list_distinct(mins)) AS sel FROM winn

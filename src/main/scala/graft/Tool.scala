@@ -22,8 +22,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     task count and shuffle bytes;
   *   - `bucketed count...`: the band-join families of [[BucketFamilies]]
   *     timed under each pinned index bucket count;
-  *   - `knn [salt...]`: the batch-KNN pair stage alone vs the full
-  *     operator (pairs + TopKAgg) per salt factor.
+  *   - `knn`: the batch-KNN exact pair stage, join only and scored, vs
+  *     the full operator (pairs + top-3 tail).
   */
 object Tool {
 
@@ -64,21 +64,28 @@ object Tool {
     catch { case _: java.util.concurrent.TimeoutException => Thread.sleep(500) }
 
   /** The executed plan of a noop write of each query: explained after
-    * the write, so the adaptive plan is the final one the run used. */
+    * the write, so the adaptive plan is the final one the run used. The
+    * listener goes on the query's own session: an operator may bind its
+    * plan to a clone (TopKAgg.posture), whose listener manager is not
+    * the caller's. */
   private def plans(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
     @volatile var last: QueryExecution = null
     val listener = new QueryExecutionListener {
       def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = last = qe
       def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    try named(names).foreach { case (n, f) =>
+    named(names).foreach { case (n, f) =>
       last = null
-      noop(f(spark, dir))
-      drainListeners(spark)
+      val df = f(spark, dir)
+      val session = df.sparkSession
+      session.listenerManager.register(listener)
+      try {
+        noop(df)
+        drainListeners(session)
+      } finally session.listenerManager.unregister(listener)
       println(s"===== plan $n =====")
       println(Option(last).fold("(no plan recorded)")(_.explainString(FormattedMode)))
-    } finally spark.listenerManager.unregister(listener)
+    }
   }
 
   private def time(spark: SparkSession, dir: String, names: Seq[String]): Unit =
@@ -149,24 +156,19 @@ object Tool {
       } finally spark.conf.unset(sources.IndexStore.BucketsConf)
     }
 
-  /** Batch-KNN stage attribution: the scored-pair stage alone vs the full
-    * operator per salt factor, so block-join compute, scoring and the
-    * top-k aggregate are costed separately on the same index tables. */
-  private def knn(spark: SparkSession, dir: String, salts: Seq[Int]): Unit = {
+  /** Batch-KNN stage attribution over the census-adaptive exact pair
+    * path: join only, scored pairs, and the full operator (pairs + top-3
+    * tail), so block-join compute, scoring and the top-k aggregate are
+    * costed separately on the same index tables. */
+  private def knn(spark: SparkSession, dir: String): Unit = {
     def best(df: DataFrame): Double = warmThenTimed(df)._2.min
-    salts.foreach { s =>
-      val pairs = operators.SearchOps.knnPairsScored(spark, dir, s, Long.MaxValue)
-      // same join, scoring pruned away — isolates pair iteration cost
-      val joinOnly = pairs.select(col("label"), col("a_id"), col("b_id"))
-      // posture as the operator does, so agg_delta reflects the real plan
-      val full = functions.TopKAgg.posture(spark, pairs
-        .groupBy(col("label"), col("a_id"))
-        .agg(functions.TopKAgg.topK(col("score"), col("b_id"), 3).as("top"))
-        .select(col("label"), col("a_id"), posexplode(col("top"))))
-      val tj = best(joinOnly); val tp = best(pairs); val tf = best(full)
-      println(f"KNN salt=$s%2d join=$tj%6.2fs pairs=$tp%6.2fs full=$tf%6.2fs " +
-        f"score_delta=${tp - tj}%6.2fs agg_delta=${tf - tp}%6.2fs")
-    }
+    val pairs = operators.SearchOps.exactPairs(spark, dir, None, None)
+    // same join, scoring pruned away — isolates pair iteration cost
+    val joinOnly = pairs.select(col("label"), col("a_id"), col("b_id"))
+    val full = operators.SearchOps.top3(spark, pairs)
+    val tj = best(joinOnly); val tp = best(pairs); val tf = best(full)
+    println(f"KNN join=$tj%6.2fs pairs=$tp%6.2fs full=$tf%6.2fs " +
+      f"score_delta=${tp - tj}%6.2fs agg_delta=${tf - tp}%6.2fs")
   }
 
   def main(args: Array[String]): Unit = {
@@ -181,8 +183,7 @@ object Tool {
         time(spark, dir, rest)
       case "stages" => stages(spark, dir, rest)
       case "bucketed" => bucketed(spark, dir, rest.map(_.toInt))
-      case "knn" =>
-        knn(spark, dir, if (rest.isEmpty) Seq(1, 4, 8, 16) else rest.map(_.toInt))
+      case "knn" => knn(spark, dir)
       case other => sys.error(s"unknown mode '$other'")
     } finally spark.stop()
   }

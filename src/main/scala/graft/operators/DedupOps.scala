@@ -670,44 +670,9 @@ object DedupOps {
       band: Column): Column =
     graft.functions.ArrayFunctions.firstEqualIndex(aSigs, bSigs) === band
 
-
-  /** Embedding-cosine near-dup pairs (>= 0.42) inside IVF label cells.
-    *
-    * Candidate generation is random-hyperplane LSH (Charikar, STOC 2002),
-    * NOT an all-pairs block join: each vector emits 32 band signatures
-    * from the codegen'd HyperplaneBandSigs expression, candidates
-    * materialize only where a full band matches within the label cell,
-    * and the codegen'd CosineSimilarity verify keeps exactly the pairs the
-    * all-pairs formulation would. Embeddings RIDE the band rows (see
-    * [[embBands]]) so the verify runs inside the co-located collision
-    * join — fetching them back by id would sort the PAIR stream, the
-    * sf10 detonation SCALE_NOTES documents. A cell of millions of
-    * vectors costs signature collisions, not cell², in pair comparisons.
-    */
-  /** Exact duplicated-substring coverage (Lee et al. 2022, "Deduplicating
-    * Training Data Makes Language Models Better"): the fraction of each
-    * document's tokens covered by an [[SubstrL]]-token span that also
-    * appears VERBATIM in another document. The paper's suffix array finds
-    * arbitrary-length repeats; the distributed formulation fixes the span
-    * length and gets the same per-token coverage signal with
-    * embarrassingly parallel pieces:
-    *
-    *  1. positional 8-grams via the zip_with doubling chain (2→4→8 —
-    *     three array ops per row, no per-element re-eval), md5-thinned so
-    *     the census shuffles 16-byte keys, never gram text;
-    *  2. the df census — ONE exchange on gram hash, the statistics pass
-    *     every corpus-frequency method pays;
-    *  3. duplicated starts back to their docs (same exchange key), then
-    *     coverage = gap-capped sum over the per-doc sorted starts
-    *     (Σ min(L, next−pos)) — a lead() window on the doc_id
-    *     partitioning, NOT an L-fold position explode.
-    *
-    * Output joins every document (left), so clean docs report 0.0 — the
-    * downstream filter (drop docs above a coverage threshold) is then a
-    * pure scan. */
+  /** Span length, in tokens, of the verbatim repeats [[dedupSubstring]]
+    * counts. */
   val SubstrL = 8
-
-
 
   /** Positional space-joined 8-grams: g8[i] covers tokens i..i+7 — one
     * native pass (NGramJoin), byte-identical to the former zip_with
@@ -741,6 +706,27 @@ object DedupOps {
         .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("gh"))
     })
 
+  /** Exact duplicated-substring coverage (Lee et al. 2022, "Deduplicating
+    * Training Data Makes Language Models Better"): the fraction of each
+    * document's tokens covered by an [[SubstrL]]-token span that also
+    * appears VERBATIM in another document. The paper's suffix array finds
+    * arbitrary-length repeats; the distributed formulation fixes the span
+    * length and gets the same per-token coverage signal with
+    * embarrassingly parallel pieces:
+    *
+    *  1. positional 8-grams in one native pass ([[grams8]]), keyed by
+    *     xxhash64 into the gh-bucketed [[substrGrams]] table, so no
+    *     later step carries gram text;
+    *  2. the df census — the statistics pass every corpus-frequency
+    *     method pays, grouped inside the gh buckets with no exchange;
+    *  3. duplicated starts back to their docs (co-located on gh), then
+    *     coverage = gap-capped sum over the per-doc sorted starts
+    *     (Σ min(L, next−pos)) in one native pass, NOT an L-fold position
+    *     explode.
+    *
+    * Output joins every document (left), so clean docs report 0.0 — the
+    * downstream filter (drop docs above a coverage threshold) is then a
+    * pure scan. */
   def dedupSubstring(spark: SparkSession, dir: String): DataFrame = {
     // only size(ts) is consumed below — the shared token-count memo
     // serves it without a tokenizer pass
@@ -782,8 +768,8 @@ object DedupOps {
   }
 
   /** SemDeDup cosine threshold — shared with the oracle SQL. Matches the
-    * hyperplane-LSH op's threshold so the two near-dup definitions are
-    * comparable on the same corpus. */
+    * hyperplane-LSH op's threshold ([[EmbTau]]) so the two near-dup
+    * definitions are comparable on the same corpus. */
   val SemTau = 0.42
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
@@ -873,23 +859,24 @@ object DedupOps {
         col("routed"))
   }
 
-  def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    val bands = embBands(spark, dir)
-    // first-match-band discipline: each colliding pair is emitted by
-    // exactly one band, so no (a_id, b_id) distinct exchange is needed;
-    // embeddings RIDE the band rows (see embBands), so the verify cosine
-    // runs inside the co-located join and pair rows never exchange
-    bands
-      .select(col("vec_id").as("a_id"), col("sigs"), col("band"),
-        col("cell_sig"), col("emb").as("a_emb"))
-      .join(bands.select(col("vec_id").as("b_id"), col("sigs").as("b_sigs"),
-          col("band").as("b_band"), col("cell_sig").as("b_cell_sig"),
-          col("emb").as("b_emb")),
-        col("band") === col("b_band") && col("cell_sig") === col("b_cell_sig") &&
-          col("a_id") < col("b_id") &&
-          firstBandMatch(col("sigs"), col("b_sigs"), col("band")))
+  /** dedup_embedding's cosine threshold — shared with the oracle SQL. */
+  val EmbTau = 0.42
+
+  /** Embedding-cosine near-dup pairs (>= [[EmbTau]]) inside IVF label cells.
+    *
+    * Candidate generation is random-hyperplane LSH (Charikar, STOC 2002),
+    * NOT an all-pairs block join: each vector emits 32 band signatures
+    * from the codegen'd HyperplaneBandSigs expression, candidates
+    * materialize only where a full band matches within the label cell,
+    * and the codegen'd CosineSimilarity verify keeps exactly the pairs the
+    * all-pairs formulation would. The collision join is the batch-KNN
+    * family's ([[SearchOps.bandPairs]]): first matching band only, the
+    * verify in place on the embedding riders. A cell of millions of
+    * vectors costs signature collisions, not cell², in pair comparisons.
+    */
+  def dedupEmbedding(spark: SparkSession, dir: String): DataFrame =
+    SearchOps.bandPairs(embBands(spark, dir))
       .select(col("a_id"), col("b_id"),
         fastRound(cosineSim(col("a_emb"), col("b_emb")), 4).as("score"))
-      .filter(col("score") >= 0.42)
-  }
+      .filter(col("score") >= EmbTau)
 }

@@ -315,7 +315,7 @@ object SearchOps {
     *
     * Pair scoring pays ONE dot product per UNORDERED pair: candidates are
     * enumerated once (a_id < b_id), scored once, and mirrored into both
-    * directions by a narrow explode ([[mirrorScored]]) — half the block
+    * directions by a narrow explode ([[top3]]) — half the block
     * join's multiply-adds. Each side carries its
     * [[graft.functions.SumSquares]] norm computed once per VECTOR, so the
     * inner loop also skips the two norm accumulations cosine would redo
@@ -336,15 +336,17 @@ object SearchOps {
     * (label, slice) join distribution (subset rule), so without it
     * Spark happily co-locates the join back onto one bucket-task and
     * the salt spreads nothing. The exchanges carry VECTOR-count rows
-    * (N + Σ slices·cell_n), never the n² pair rows. A fixed global
-    * override remains via [[KnnSaltConf]] > 1 for multi-node layouts
-    * where the operator should not census first.
+    * (N + Σ slices·cell_n), never the n² pair rows.
     *
     * Guarded by [[exactCellCap]]: an oversize cell aborts the job with a
     * routing message instead of detonating quadratically.
     */
   def vecKnnJoin(spark: SparkSession, dir: String): DataFrame =
     vecKnnJoinCapped(spark, dir, exactCellCap(spark))
+
+  private[graft] def vecKnnJoinCapped(spark: SparkSession, dir: String,
+      cellCap: Long): DataFrame =
+    top3(spark, exactPairs(spark, dir, None, Some(cellCap)))
 
   /** Pair-work budget per task for the adaptive salt in [[vecKnnJoin]]:
     * a cell of n vectors is n² scored pairs, and a cell whose n² exceeds
@@ -367,11 +369,6 @@ object SearchOps {
     spark.conf.getOption(KnnPairBudgetConf).map(_.toLong)
       .getOrElse(KnnPairBudgetDefault)
 
-  /** Census-adaptive scored-pair stage: balanced cells take the
-    * exchange-free co-located join; oversize cells are sliced per the
-    * [[knnPairBudget]] rule. Result set is identical either way — the
-    * salt only partitions pair ENUMERATION, so downstream hashes and
-    * the top-k agg are unchanged. */
   /** The per-label cell-size census over the bucketed embByLabel table,
     * memoized (persisted) per (session, dir) via PlanCache: the exact
     * block join, the auto router and the salt sizing all broadcast this
@@ -390,140 +387,103 @@ object SearchOps {
         .groupBy(col("label")).agg(count(lit(1)).as("cell_n"))
     }
 
-  private[graft] def knnPairsAdaptive(spark: SparkSession, dir: String,
-      cellCap: Long): DataFrame = {
+  /** The batch-KNN score of a candidate pair from its embedding and
+    * SumSquares riders ([[scoreParts]]): (label, a_id, b_id, score). */
+  private def knnScored(pairs: DataFrame): DataFrame =
+    pairs.select(col("label"), col("a_id"), col("b_id"),
+      scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss")).as("score"))
+
+  /** Exact scored pairs (label, a_id, b_id, score), one per UNORDERED
+    * pair (a_id < b_id), inside the census cells of at most `upTo`
+    * vectors (None = every cell). Census-adaptive: the co-located
+    * bucket join while every selected cell² fits [[knnPairBudget]];
+    * past it each cell is sliced into ceil(cell²/budget) salt slices
+    * (see [[vecKnnJoin]]). The salt only partitions pair ENUMERATION —
+    * side B replicates to every slice, so a pair matches exactly at a's
+    * slice and the result set is identical either way. `guardCap` plants
+    * the [[exactCellCap]] abort on side A: assert_true lives in a FILTER
+    * so column pruning cannot drop it, one comparison per row. */
+  private[graft] def exactPairs(spark: SparkSession, dir: String,
+      upTo: Option[Long], guardCap: Option[Long]): DataFrame = {
     val budget = knnPairBudget(spark)
     require(budget >= 1, s"$KnnPairBudgetConf must be >= 1, got $budget")
     val emb = spark.table(graft.sources.IndexStore.index(spark, dir).embByLabel)
-    // the routing census is exactly IndexStore.maxCellSize's memoized
-    // scalar — the previous inline groupBy+collect re-ran the census
-    // aggregate on EVERY plan construction (three jobs per bench run);
-    // the memo computes it once per (dir, corpus state) like the LSH
-    // geometry census does
+    val census = cellCensus(spark, dir)
+    // the hottest SELECTED cell decides; the memoized corpus maximum
+    // answers unless a cap below it leaves the bound inconclusive
     val maxCell = graft.sources.IndexStore.maxCellSize(spark, dir)
-    if (maxCell * maxCell <= budget) knnPairsScored(spark, dir, 1, cellCap)
-    else {
-      val ssq = graft.functions.VectorFunctions.sumSquares _
-      val sized = cellCensus(spark, dir)
-        .withColumn("cell_salt", least(greatest(
-          ceil(col("cell_n") * col("cell_n") / lit(budget.toDouble)),
-          lit(1L)), lit(KnnMaxSaltSlices)).cast("int"))
-      val a = emb
-        .select(col("label"), col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-        .join(broadcast(sized), "label")
-        .filter(assert_true(col("cell_n") <= cellCap,
-          concat(lit("vec_knn_join: cell size "), col("cell_n"),
-            lit(s" exceeds the exact-cell cap $cellCap (isqrt(knnPairBudget × maxSaltSlices)) — exact per-cell KNN is cell² "),
-            lit("compute; route this corpus to vec_knn_join_ann"))).isNull)
-        .select(col("label"), col("a_id"), col("a_emb"),
-          ssq(col("a_emb")).as("a_ss"),
-          pmod(xxhash64(col("a_id")), col("cell_salt").cast("long"))
-            .cast("int").as("slice"))
-        .repartition(col("label"), col("slice"))
-      val b = emb
-        .select(col("label").as("b_label"), col("vec_id").as("b_id"),
-          col("embedding").as("b_emb"), ssq(col("embedding")).as("b_ss"))
-        .join(broadcast(sized.withColumnRenamed("label", "b_label")
-          .select(col("b_label"), col("cell_salt"))), "b_label")
-        .select(col("b_label"), col("b_id"), col("b_emb"), col("b_ss"),
-          explode(sequence(lit(0), col("cell_salt") - 1)).as("b_slice"))
-        .repartition(col("b_label"), col("b_slice"))
-      // a < b once per unordered pair (B replicates to every slice, so the
-      // pair matches exactly at a's slice); mirrored after the one dot
-      mirrorScored(a.join(b, col("label") === col("b_label") &&
-          col("slice") === col("b_slice") && col("a_id") < col("b_id"))
-        .select(col("label"), col("a_id"), col("b_id"),
-          scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss")).as("score")))
+    val hottest = upTo.filter(_ < maxCell).fold(maxCell) { c =>
+      if (c * c <= budget) c
+      else census.filter(col("cell_n") <= c)
+        .agg(coalesce(max(col("cell_n")), lit(0L))).head().getLong(0)
     }
-  }
-
-  /** Fixed-salt override for [[vecKnnJoin]]'s block join: 1 (default) =
-    * census-adaptive (see [[knnPairsAdaptive]]); >1 = salt EVERY cell
-    * into that many slices without the census action (see the
-    * vecKnnJoin scaladoc for when that trade wins). */
-  private[graft] val KnnSaltConf = "spark.graft.knnSaltFactor"
-
-  private[graft] def knnSaltFactor(spark: SparkSession): Int =
-    spark.conf.getOption(KnnSaltConf).map(_.toInt).getOrElse(1)
-
-  /** Restore both directions of a once-per-unordered-pair scored stream:
-    * input (label, a_id, b_id, score) with a_id < b_id, output both
-    * orientations via a narrow explode — the same shape [[vecKnnJoinAnn]]
-    * uses. Mirroring AFTER scoring halves the dot products (the dominant
-    * stage of every exact KNN plan) while the row count into the top-k
-    * aggregate is unchanged, so downstream hashes are identical. */
-  private[graft] def mirrorScored(scored: DataFrame): DataFrame =
-    scored
-      .select(col("label"), col("score"), explode(array(
-        struct(col("a_id").as("s"), col("b_id").as("o")),
-        struct(col("b_id").as("s"), col("a_id").as("o")))).as("d"))
-      .select(col("label"), col("d.s").as("a_id"), col("score"),
-        col("d.o").as("b_id"))
-
-  /** The scored-pair stage of [[vecKnnJoin]] with an EXPLICIT salt
-    * factor — shared by the operator (salt from [[knnSaltFactor]]) and
-    * the `graft.Tool knn` stage attribution. Pairs are enumerated ONCE per
-    * unordered pair (a_id < b_id), scored once, and mirrored by
-    * [[mirrorScored]] — half the dot products of the ordered-pair join
-    * this replaced, same output. */
-  private[graft] def knnPairsScored(spark: SparkSession, dir: String,
-      salt: Int, cellCap: Long): DataFrame = {
-    // salt <= 0 would NOT error: pmod(x, 0) is null and sequence(0, -1)
-    // is [0,-1], so the salt-equality join silently matches nothing and
-    // the KNN output is empty. Fail loudly on a misconfigured factor.
-    require(salt >= 1, s"$KnnSaltConf must be >= 1, got $salt")
-    val emb = spark.table(graft.sources.IndexStore.index(spark, dir).embByLabel)
-    // guard: the memoized census broadcasts back onto side A; assert_true
-    // lives in a FILTER so column pruning cannot drop it, and costs one
-    // comparison per row
-    val cellSizes = cellCensus(spark, dir)
+    val salted = hottest * hottest > budget
+    val sized = if (!salted) census else census
+      .withColumn("cell_salt", least(greatest(
+        ceil(col("cell_n") * col("cell_n") / lit(budget.toDouble)),
+        lit(1L)), lit(KnnMaxSaltSlices)).cast("int"))
+    val inCells = upTo.fold(lit(true))(c => col("cell_n") <= c)
+    // salt slices: side A hashes to one slice, side B replicates to every
+    // slice of its cell
+    val (aSlice, bSlice) =
+      if (!salted) (Nil, Nil)
+      else (Seq(pmod(xxhash64(col("a_id")), col("cell_salt").cast("long"))
+          .cast("int").as("slice")),
+        Seq(explode(sequence(lit(0), col("cell_salt") - 1)).as("b_slice")))
     val ssq = graft.functions.VectorFunctions.sumSquares _
-    val a0 = emb.select(col("label"), col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-      .join(broadcast(cellSizes), "label")
-      .filter(assert_true(col("cell_n") <= cellCap,
-        concat(lit("vec_knn_join: cell size "), col("cell_n"),
-          lit(s" exceeds the exact-cell cap $cellCap (isqrt(knnPairBudget × maxSaltSlices)) — exact per-cell KNN is cell² "),
-          lit("compute; route this corpus to vec_knn_join_ann"))).isNull)
-      .select(col("label"), col("a_id"), col("a_emb"), ssq(col("a_emb")).as("a_ss"))
+    val a0 = emb
+      .select(col("label"), col("vec_id").as("a_id"), col("embedding").as("a_emb"))
+      .join(broadcast(sized), "label")
+      .filter(inCells)
+    val a = guardCap.fold(a0)(cap => a0.filter(assert_true(col("cell_n") <= cap,
+      concat(lit("vec_knn_join: cell size "), col("cell_n"),
+        lit(s" exceeds the exact-cell cap $cap (isqrt(knnPairBudget × maxSaltSlices)) — exact per-cell KNN is cell² "),
+        lit("compute; route this corpus to vec_knn_join_ann"))).isNull))
+      .select(Seq(col("label"), col("a_id"), col("a_emb"),
+        ssq(col("a_emb")).as("a_ss")) ++ aSlice: _*)
     val b0 = emb.select(col("label").as("b_label"), col("vec_id").as("b_id"),
-      col("embedding").as("b_emb"), ssq(col("embedding")).as("b_ss"))
-    // a_id < b_id: each unordered pair is enumerated exactly once — under
-    // the salt too, because side B replicates to EVERY slice, so pair
-    // (x, y) with x < y matches exactly at x's slice
-    val joined =
-      if (salt == 1)
-        a0.join(b0, col("label") === col("b_label") && col("a_id") < col("b_id"))
-      else {
-        // the repartitions are load-bearing: the bucketed scan's
-        // HashPartitioning(label) already satisfies the (label, salt)
-        // join distribution (subset rule), so without an explicit
-        // exchange the join co-locates back onto label buckets and the
-        // salt spreads nothing
-        val a = a0.withColumn("a_salt", pmod(xxhash64(col("a_id")), lit(salt.toLong)))
-          .repartition(col("label"), col("a_salt"))
-        val b = b0.withColumn("b_salt",
-            explode(sequence(lit(0L), lit(salt.toLong - 1L))))
-          .repartition(col("b_label"), col("b_salt"))
-        a.join(b, col("label") === col("b_label") &&
-          col("a_salt") === col("b_salt") && col("a_id") < col("b_id"))
-      }
-    mirrorScored(joined
-      .select(col("label"), col("a_id"), col("b_id"),
-        scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss")).as("score")))
+      col("embedding").as("b_emb"))
+    // an unselective, unsalted side B needs no census: the label
+    // equality alone pairs it, read co-located off the bucketed scan
+    val b = (if (!salted && upTo.isEmpty) b0 else b0
+        .join(broadcast(sized.withColumnRenamed("label", "b_label")), "b_label")
+        .filter(inCells))
+      .select(Seq(col("b_label"), col("b_id"), col("b_emb"),
+        ssq(col("b_emb")).as("b_ss")) ++ bSlice: _*)
+    // the repartitions are load-bearing: the bucketed scan's
+    // HashPartitioning(label) already satisfies the (label, slice) join
+    // distribution (subset rule), so without an explicit exchange the
+    // join co-locates back onto label buckets and the salt spreads nothing
+    val (ja, jb, sameSlice) =
+      if (!salted) (a, b, lit(true))
+      else (a.repartition(col("label"), col("slice")),
+        b.repartition(col("b_label"), col("b_slice")), col("slice") === col("b_slice"))
+    knnScored(ja.join(jb,
+      col("label") === col("b_label") && sameSlice && col("a_id") < col("b_id")))
   }
 
-  private[graft] def vecKnnJoinCapped(spark: SparkSession, dir: String,
-      cellCap: Long): DataFrame =
-    graft.functions.TopKAgg.posture(spark,
-      (knnSaltFactor(spark) match {
-        case 1 => knnPairsAdaptive(spark, dir, cellCap)
-        case s => knnPairsScored(spark, dir, s, cellCap)
-      })
-        .groupBy(col("label"), col("a_id"))
-        .agg(graft.functions.TopKAgg.topK(col("score"), col("b_id"), 3).as("top"))
-        .select(col("label"), col("a_id"), posexplode(col("top")))
-        .select(col("label"), col("a_id"), col("col.id").as("b_id"),
-          col("col.score").as("score"), (col("pos") + 1).cast("int").as("rk")))
+  /** The batch-KNN top-3 tail: restore both directions of a
+    * once-per-unordered-pair scored stream (label, a_id, b_id, score,
+    * keys...) by a narrow explode — mirroring AFTER scoring halves the
+    * dot products while the row count into the top-k aggregate is
+    * unchanged — then rank each (label, a_id, keys...) group through the
+    * bounded-heap [[graft.functions.TopKAgg]] under its scoped posture.
+    * Output (label, a_id, b_id, score, rk, keys...). */
+  private[graft] def top3(spark: SparkSession, scored: DataFrame,
+      keys: String*): DataFrame = {
+    val ks = keys.map(col)
+    graft.functions.TopKAgg.posture(spark, scored
+      .select(Seq(col("label"), col("score"), explode(array(
+        struct(col("a_id").as("s"), col("b_id").as("o")),
+        struct(col("b_id").as("s"), col("a_id").as("o")))).as("d")) ++ ks: _*)
+      .select(Seq(col("label"), col("d.s").as("a_id"), col("d.o").as("b_id"),
+        col("score")) ++ ks: _*)
+      .groupBy(Seq(col("label"), col("a_id")) ++ ks: _*)
+      .agg(graft.functions.TopKAgg.topK(col("score"), col("b_id"), 3).as("top"))
+      .select(Seq(col("label"), col("a_id"), posexplode(col("top"))) ++ ks: _*)
+      .select(Seq(col("label"), col("a_id"), col("col.id").as("b_id"),
+        col("col.score").as("score"), (col("pos") + 1).cast("int").as("rk")) ++ ks: _*))
+  }
 
   /** The IVF coarse quantizer, computed for real: per-label mean
     * embedding. Built once per (session, dir) — posexplode to (label,
@@ -864,20 +824,23 @@ object SearchOps {
     * hash-checks it against a DuckDB replay of the full
     * sign-bits→bands→candidates→verify→top-3 chain.
     */
-  def vecKnnJoinAnn(spark: SparkSession, dir: String): DataFrame = {
-    // Every unordered pair is generated ONCE (a < b) inside the
-    // co-located band-bucket join, scored ONCE IN PLACE, and only then
-    // mirrored into both directions by a narrow explode. Embeddings and
-    // SumSquares norms RIDE the band rows (see DedupOps.embBands): the
-    // previous formulation joined embeddings back onto the pair stream
-    // by id, which sort-merge-sorted the PAIR rows — at the sf10 probe
-    // (~4G collisions) that sort spilled past the host's disk and failed
-    // the job; no pair-row exchange exists in this shape at any scale.
-    // Scoring pays one dot per pair — bit-identical to cosine
-    // (SumSquares scaladoc); a and b share a cell by construction
-    // (cell_sig folds the label), so label rides side A.
-    val bands = DedupOps.embBands(spark, dir)
-    val scored = bands
+  def vecKnnJoinAnn(spark: SparkSession, dir: String): DataFrame =
+    top3(spark, knnScored(bandPairs(DedupOps.embBands(spark, dir))))
+
+  /** Band-collision candidate pairs over an [[DedupOps.embBands]]
+    * relation: every unordered pair is generated ONCE (a < b) inside the
+    * co-located band-bucket join, from its first matching band only
+    * ([[DedupOps.firstBandMatch]]), so no (a_id, b_id) distinct exchange
+    * follows. Embeddings and SumSquares norms RIDE the band rows, so each
+    * caller scores its pairs in place with its own expression (label
+    * rides side A: cell_sig folds it, so a and b share a cell). Joining
+    * embeddings back onto the pair stream by id would sort-merge-sort
+    * the PAIR rows — at the sf10 probe (~4G collisions) that sort spilled
+    * past the host's disk and failed the job; no pair-row exchange exists
+    * in this shape at any scale. Output (label, a_id, b_id, a_emb,
+    * b_emb, a_ss, b_ss). */
+  private[graft] def bandPairs(bands: DataFrame): DataFrame =
+    bands
       .select(col("vec_id").as("a_id"), col("label"), col("sigs"),
         col("band"), col("cell_sig"), col("emb").as("a_emb"), col("ss").as("a_ss"))
       .join(bands.select(col("vec_id").as("b_id"), col("sigs").as("b_sigs"),
@@ -886,19 +849,8 @@ object SearchOps {
         col("band") === col("b_band") && col("cell_sig") === col("b_cell_sig") &&
           col("a_id") < col("b_id") &&
           DedupOps.firstBandMatch(col("sigs"), col("b_sigs"), col("band")))
-      .select(col("label"), col("a_id"), col("b_id"),
-        scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss")).as("score"))
-    graft.functions.TopKAgg.posture(spark, scored
-      .select(col("label"), col("score"), explode(array(
-        struct(col("a_id").as("s"), col("b_id").as("o")),
-        struct(col("b_id").as("s"), col("a_id").as("o")))).as("d"))
-      .select(col("label"), col("d.s").as("a_id"), col("d.o").as("b_id"), col("score"))
-      .groupBy(col("label"), col("a_id"))
-      .agg(graft.functions.TopKAgg.topK(col("score"), col("b_id"), 3).as("top"))
-      .select(col("label"), col("a_id"), posexplode(col("top")))
-      .select(col("label"), col("a_id"), col("col.id").as("b_id"),
-        col("col.score").as("score"), (col("pos") + 1).cast("int").as("rk")))
-  }
+      .select(col("label"), col("a_id"), col("b_id"), col("a_emb"), col("b_emb"),
+        col("a_ss"), col("b_ss"))
 
   /** Conf knob for [[vecKnnJoinAuto]]'s per-cell routing threshold.
     * Default 50 is sized to the TEST corpus (cells of 42-63 at the
@@ -926,81 +878,22 @@ object SearchOps {
     *
     * Scale shape: the size census is one thin aggregate over the
     * bucketed table; the exact branch only ever touches bounded cells
-    * (cap² compute per task); the routed branch pays signature
+    * (cap² compute, salt-sliced past [[knnPairBudget]] exactly as in
+    * [[vecKnnJoin]]); the routed branch pays signature
     * collisions. No path shuffles candidate pairs — both rank through
     * the bounded-heap TopKAgg.
     */
   def vecKnnJoinAuto(spark: SparkSession, dir: String): DataFrame = {
     val cap = spark.conf.getOption(AutoCapConf).map(_.toLong)
       .getOrElse(AutoCapDefault)
-    val emb = spark.table(graft.sources.IndexStore.index(spark, dir).embByLabel)
-    // ONE census per evaluation, structurally: round 13 unified the four
-    // filtered census subtrees into one broadcast(cellSizes) joined in
-    // every branch, but the committed after-plan showed Catalyst pushing
-    // the post-join cell_n filters back INTO the build sides — distinct
-    // subtrees again, so ReuseExchange rebuilt the census aggregate per
-    // branch (BroadcastExchange 10→12, the round-13 verdict's item 4).
-    // The memoized census closes it structurally: the aggregate runs
-    // once into the session cache, and each branch's broadcast build is
-    // a scan of the label-bounded cached relation (InMemoryTableScan in
-    // the plan), filters pushed or not. Same rows either way.
-    val cellSizes = cellCensus(spark, dir)
-    val ssq = graft.functions.VectorFunctions.sumSquares _
-    val a = emb.join(broadcast(cellSizes), "label")
-      .filter(col("cell_n") <= cap)
-      .select(col("label"), col("vec_id").as("a_id"), col("embedding").as("a_emb"),
-        ssq(col("embedding")).as("a_ss"))
-    // the probe side is pre-filtered to small cells too (the join's
-    // label equality restricts it to small labels anyway — filtering
-    // early just skips the oversize cells' rows in the build): strictly
-    // less per-bucket probe work, identical join output
-    val b = emb.join(broadcast(cellSizes), "label")
-      .filter(col("cell_n") <= cap)
-      .select(col("label").as("b_label"), col("vec_id").as("b_id"),
-        col("embedding").as("b_emb"), ssq(col("embedding")).as("b_ss"))
-    // same once-per-unordered-pair discipline as the routed branch below:
-    // a < b through the block join, one dot per pair, directions restored
-    // by mirrorScored's narrow explode
-    val exactPairs = mirrorScored(a
-      .join(b, col("label") === col("b_label") && col("a_id") < col("b_id"))
-      .select(col("label"), col("a_id"), col("b_id"),
-        scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss")).as("score")))
-      .withColumn("routed", lit(false))
-    // routed branch: band collisions inside big cells (cell_sig already
-    // folds the label, so the collision join cannot cross cells)
-    // same once-per-unordered-pair discipline as vecKnnJoinAnn: a < b
-    // through collision/dedup/scoring, directions restored by a narrow
-    // explode — half the rows through the heavy middle, same result set
+    // routed branch: band collisions inside big cells, picked by the same
+    // memoized census the exact branch broadcasts (cell_sig already folds
+    // the label, so the collision join cannot cross cells)
     val bands = DedupOps.embBands(spark, dir)
-      .join(broadcast(cellSizes), "label")
+      .join(broadcast(cellCensus(spark, dir)), "label")
       .filter(col("cell_n") > cap)
-      .drop("cell_n")
-    // embeddings ride the band rows (see DedupOps.embBands) so collision
-    // scoring happens inside the co-located join — pair rows never
-    // exchange (the sf10 lesson vecKnnJoinAnn documents)
-    val routedPairs = bands
-      .select(col("vec_id").as("a_id"), col("label"), col("sigs"),
-        col("band"), col("cell_sig"), col("emb").as("a_emb"), col("ss").as("a_ss"))
-      .join(bands.select(col("vec_id").as("b_id"), col("sigs").as("b_sigs"),
-          col("band").as("b_band"), col("cell_sig").as("b_cell_sig"),
-          col("emb").as("b_emb"), col("ss").as("b_ss")),
-        col("band") === col("b_band") && col("cell_sig") === col("b_cell_sig") &&
-          col("a_id") < col("b_id") &&
-          DedupOps.firstBandMatch(col("sigs"), col("b_sigs"), col("band")))
-      .select(col("label"), col("a_id"), col("b_id"),
-        scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss")).as("score"))
-      .select(col("label"), col("score"), explode(array(
-        struct(col("a_id").as("s"), col("b_id").as("o")),
-        struct(col("b_id").as("s"), col("a_id").as("o")))).as("d"))
-      .select(col("label"), col("d.s").as("a_id"),
-        col("score"), col("d.o").as("b_id"), lit(true).as("routed"))
-    graft.functions.TopKAgg.posture(spark, exactPairs.unionAll(routedPairs)
-      .groupBy(col("label"), col("a_id"), col("routed"))
-      .agg(graft.functions.TopKAgg.topK(col("score"), col("b_id"), 3).as("top"))
-      .select(col("label"), col("a_id"), col("routed"), posexplode(col("top")))
-      .select(col("label"), col("a_id"), col("col.id").as("b_id"),
-        col("col.score").as("score"), (col("pos") + 1).cast("int").as("rk"),
-        col("routed")))
+    top3(spark, exactPairs(spark, dir, Some(cap), None).withColumn("routed", lit(false))
+      .unionAll(knnScored(bandPairs(bands)).withColumn("routed", lit(true))), "routed")
   }
 
   /** FTS term scoring: term frequency of the probe terms over regex tokens,

@@ -70,10 +70,28 @@ class PostureSpec extends AnyFunSuite with SparkFixture {
     } finally spark.conf.unset(SearchOps.KnnPairBudgetConf)
   }
 
-  test("knnPairsScored rejects a salt factor below 1") {
-    val e = intercept[IllegalArgumentException](
-      operators.SearchOps.knnPairsScored(spark, SfDir, 0, Long.MaxValue))
-    assert(e.getMessage.contains("knnSaltFactor"))
+  test("auto KNN's exact branch takes the census salt too") {
+    import operators.SearchOps
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val routedAtDefaults = rows(SearchOps.vecKnnJoinAuto(spark, SfDir))
+    // the budget of the test above slices every cell the exact branch
+    // selects: all of them under an unbounded cap (so the rows are
+    // vec_knn_join's), the cells at or under the default cap otherwise
+    // (the census, not the cap bound, finds the hottest selected cell)
+    spark.conf.set(SearchOps.KnnPairBudgetConf, "64")
+    try {
+      assert(rows(SearchOps.vecKnnJoinAuto(spark, SfDir)) == routedAtDefaults)
+      spark.conf.set(SearchOps.AutoCapConf, Long.MaxValue.toString)
+      val df = SearchOps.vecKnnJoinAuto(spark, SfDir)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("hashpartitioning(label") && plan.contains("slice"),
+        s"the exact branch must exchange on (label, slice):\n$plan")
+      assert(rows(df.drop("routed")) == rows(SearchOps.vecKnnJoin(spark, SfDir)))
+    } finally {
+      spark.conf.unset(SearchOps.KnnPairBudgetConf)
+      spark.conf.unset(SearchOps.AutoCapConf)
+    }
   }
 
   test("fastRound fails loudly on non-finite input, like Spark's round") {
