@@ -694,6 +694,45 @@ object SparkEntry {
        |  FROM sub s JOIN pc$PqIters p USING (m)) WHERE rk = 1)""".stripMargin
   }
 
+  /** Generated oracle for graph_path_find_deep — MUST stay in lockstep
+    * with GraphOps.pathFind (min-parent rule) and GraphOps.MaxDepth:
+    * shortest path supplier 0 → part 37. Min-parent BFS layers
+    * l1..l<MaxDepth> over the bipartite edge set (odd layers are parts,
+    * even ones suppliers, so each layer subtracts only the earlier layers
+    * of its own type), then a backtrack from the minimum hop holding the
+    * destination. MATERIALIZED: DuckDB 1.0 inlines CTEs, so the
+    * multi-referenced edge relation and BFS levels would re-evaluate per
+    * reference — at sf10 the repeated DISTINCT-over-60M-rows hash builds
+    * spill past a small host's disk. Each materialized relation is edge-
+    * or frontier-bounded (small). */
+  private lazy val duckPathFindDeep: String = {
+    import operators.GraphOps.MaxDepth
+    val layers = (1 to MaxDepth).map { h =>
+      val (to, from) = if (h % 2 == 1) ("dst", "src") else ("src", "dst")
+      val seen = (h - 2 to 0 by -2).map(k => s"e.$to NOT IN (SELECT id FROM l$k)")
+      val where = if (seen.isEmpty) "" else seen.mkString(" WHERE ", " AND ", "")
+      s"""l$h AS MATERIALIZED (SELECT e.$to AS id, min(e.$from) AS par
+         |  FROM e JOIN l${h - 1} p ON e.$from = p.id$where GROUP BY e.$to)""".stripMargin
+    }.mkString(",\n")
+    val reached = (1 to MaxDepth).map(h => s"SELECT $h AS hop, id, par FROM l$h")
+      .mkString("\n  UNION ALL ")
+    val steps = (1 until MaxDepth).map(k =>
+      s"""b$k AS (SELECT r.hop, r.id, r.par FROM r JOIN b${k - 1} b
+         |  ON r.hop = b.hop - 1 AND r.id = b.par)""".stripMargin).mkString(",\n")
+    val path = (0 until MaxDepth).map(k => s"SELECT hop, id FROM b$k")
+      .mkString(" UNION ALL ")
+    s"""WITH e AS MATERIALIZED (SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
+       |l0 AS (SELECT 0::BIGINT AS id),
+       |$layers,
+       |r AS MATERIALIZED ($reached),
+       |b0 AS (SELECT hop, id, par FROM r WHERE hop % 2 = 1 AND id = 37
+       |  ORDER BY hop LIMIT 1),
+       |$steps
+       |SELECT hop AS step, CASE WHEN hop % 2 = 1 THEN 'part' ELSE 'supplier' END
+       |  AS node_type, id AS node_id FROM ($path)
+       |UNION ALL SELECT 0 AS step, 'supplier' AS node_type, 0::BIGINT AS node_id FROM b0""".stripMargin
+  }
+
   /** DuckDB-runnable oracle SQL, same column names as the Spark result. */
   def oracleSql: Map[String, String] = Map(
     // exact decimal sums, mirroring Relational.q1Agg: double sums are
@@ -2005,24 +2044,7 @@ object SparkEntry {
         |SELECT 0 AS step, 'supplier' AS node_type, 0::BIGINT AS node_id FROM b1
         |UNION ALL SELECT 1 AS step, 'part' AS node_type, p1 AS node_id FROM b1
         |UNION ALL SELECT 2 AS step, 'supplier' AS node_type, t_id AS node_id FROM b1""".stripMargin,
-    // MATERIALIZED: DuckDB 1.0 inlines CTEs, so the multi-referenced
-    // edge relation and BFS levels re-evaluate per reference — at sf10
-    // the repeated DISTINCT-over-60M-rows hash builds compound past the
-    // replay box's spill disk. Each materialized relation is edge- or
-    // frontier-bounded (small), so this caps both compute and spill.
-    "graph_path_find_deep" ->
-      """WITH e AS MATERIALIZED (SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
-        |l1 AS MATERIALIZED (SELECT dst AS id, min(src) AS par FROM e WHERE src = 0 GROUP BY dst),
-        |l2 AS MATERIALIZED (SELECT e.src AS id, min(e.dst) AS par FROM e JOIN l1 ON e.dst = l1.id
-        |       WHERE e.src <> 0 GROUP BY e.src),
-        |l3 AS (SELECT e.dst AS id, min(e.src) AS par FROM e JOIN l2 ON e.src = l2.id
-        |       WHERE e.dst NOT IN (SELECT id FROM l1) GROUP BY e.dst),
-        |b3 AS (SELECT id AS n3, par AS s2 FROM l3 WHERE id = 37),
-        |b2 AS (SELECT b3.n3, b3.s2, l2.par AS p1 FROM b3 JOIN l2 ON b3.s2 = l2.id)
-        |SELECT 0 AS step, 'supplier' AS node_type, 0::BIGINT AS node_id FROM b2
-        |UNION ALL SELECT 1 AS step, 'part' AS node_type, p1 AS node_id FROM b2
-        |UNION ALL SELECT 2 AS step, 'supplier' AS node_type, s2 AS node_id FROM b2
-        |UNION ALL SELECT 3 AS step, 'part' AS node_type, n3 AS node_id FROM b2""".stripMargin,
+    "graph_path_find_deep" -> duckPathFindDeep,
     "graph_impact_phased" ->
       """WITH e AS (SELECT DISTINCT l_suppkey AS src, l_partkey AS dst FROM lineitem),
         |cp AS (SELECT DISTINCT o_custkey AS cust, l_partkey AS part

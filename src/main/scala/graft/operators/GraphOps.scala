@@ -65,58 +65,81 @@ object GraphOps {
   /** Depth cap, as in the reference (searcher_sql.go:44 MaxDepth = 6). */
   val MaxDepth = 6
 
-  /** Bounded-depth BFS over a typed adjacency list `adj(f_t, f_id, t_t,
-    * t_id)` from `seeds(t, id)`: per hop, expand the frontier through the
-    * adjacency, `distinct()` the new frontier, and left-anti-subtract the
-    * visited set so every node surfaces at its MINIMUM hop exactly once —
-    * the reference's recursive-CTE traversal re-expressed as `depth`
-    * self-joins (internal/graph/searcher_sql.go:146-156 recursive CTE with
-    * visited-dedup).
+  /** Layered bounded-depth BFS, the one traversal behind every per-hop
+    * graph operator (the reference's recursive CTE with visited-dedup,
+    * internal/graph/searcher_sql.go:146-156, as `depth` self-joins). From
+    * `seeds`, each hop takes `expand(frontier)` (the deduplicated
+    * candidates one step out), left-anti-subtracts the visited set on the
+    * `keys` columns so every node surfaces once, at its MINIMUM hop, and
+    * makes the survivors the next frontier. `finish` shapes the layers,
+    * unioned under a leading `hop` column (1..depth), into the result
+    * memoized under `tag`.
     *
-    * Scale posture: the frontier and visited set are thin (type, id)
-    * relations; each hop is one shuffle join on the frontier key. Frontiers
-    * persist so hop h doesn't re-derive hops 1..h-1 (lineage would double
-    * per level otherwise) — and every public BFS operator memoizes its
-    * OUTPUT through PlanCache, so the per-hop frontier caches are created
-    * at most once per (session, dir, op) rather than accumulating on every
-    * invocation; a cluster deployment would checkpoint frontiers instead.
+    *  - Frontier lifetime: each layer persists through PlanCache as
+    *    `$tag:frontier$h` (not a bare .persist()), so hop h+1 never
+    *    re-derives hops 1..h and invalidate() releases the layers with
+    *    the memoized output instead of pinning executor storage for the
+    *    session lifetime. A fixed tag builds its layers at most once per
+    *    (session, dir). `release` is for per-query tags (one per
+    *    endpoint pair): the result is cut and the layers dropped, so the
+    *    memo holds only the small result and many distinct queries do
+    *    not grow executor storage without bound.
+    *  - Epoch: one snapshot, taken before layer 1, guards every install,
+    *    the result's included. Layer h+1 is built from the local hop-h
+    *    DataFrame, so an invalidate landing mid-BFS must suppress every
+    *    later install too, or the next query would recombine fresh early
+    *    layers with stale cached late ones (PlanCache.getOrBuildAt).
+    *  - Lineage: each layer is cut eagerly (.lineageCut). Uncut, layer h's
+    *    plan holds every prior layer twice (frontier + visited chain), so
+    *    the tree doubles per hop and at depth 6 Catalyst chokes on the
+    *    2^6 tree before a single task runs. A cluster deployment sets
+    *    Checkpoints.DirConf to make the same cut a reliable checkpoint.
+    *
+    * Scale posture: the frontier and visited set are thin key relations
+    * and each hop is one join on the frontier key; depth is capped at
+    * [[MaxDepth]] as in the reference.
     */
-  private def typedBfs(spark: SparkSession, dir: String, tag: String,
-      adj: DataFrame, seeds: DataFrame, depth: Int, asOf: Long): DataFrame = {
+  private def layeredBfs(spark: SparkSession, dir: String, tag: String,
+      keys: Seq[String], depth: Int, release: Boolean = false)(
+      seeds: => DataFrame, expand: DataFrame => DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame = {
     require(depth >= 1 && depth <= MaxDepth, s"depth must be in [1, $MaxDepth]")
-    var visited = seeds
-    var frontier = seeds
-    var out: DataFrame = null
-    for (h <- 1 to depth) {
-      // frontier persists route through PlanCache (not a bare .persist())
-      // so invalidate() releases them along with the memoized BFS output
-      // instead of pinning executor storage for the session lifetime.
-      // Layer installs all compare against `asOf` — the epoch snapshot the
-      // OUTERMOST query took before layer 1 — because layer h+1 is built
-      // from the local hop-h DataFrame: an invalidate landing mid-BFS must
-      // suppress every later layer's install too, or the next query would
-      // recombine fresh early layers with stale cached late ones.
-      // localCheckpoint TRUNCATES THE LINEAGE: without it, layer h's
-      // logical plan contains every prior layer twice (frontier + visited
-      // chain), so the plan tree doubles per hop — at depth 6 Catalyst
-      // chokes on the 2^6 tree before a single task runs. A cluster
-      // deployment would use reliable checkpoint() for the same reason.
-      val next = graft.PlanCache.getOrBuildAt(spark, dir, s"$tag:frontier$h",
-          asOf) {
-        adj
-          .join(frontier.select(col("t").as("f_t"), col("id").as("f_id")),
-            Seq("f_t", "f_id"))
-          .select(col("t_t").as("t"), col("t_id").as("id")).distinct()
-          .join(visited, Seq("t", "id"), "left_anti")
-          .lineageCut
+    val asOf = graft.PlanCache.currentEpoch
+    val frontierTags = (1 to depth).map(h => s"$tag:frontier$h")
+    graft.PlanCache.getOrBuildAt(spark, dir, tag, asOf) {
+      var frontier = seeds
+      var visited = frontier.select(keys.map(col): _*)
+      var layers: DataFrame = null
+      for (h <- 1 to depth) {
+        val next = graft.PlanCache.getOrBuildAt(spark, dir, frontierTags(h - 1),
+            asOf) {
+          expand(frontier).join(visited, keys, "left_anti").lineageCut
+        }
+        val layer = next.select(lit(h).as("hop") +: next.columns.toSeq.map(col): _*)
+        layers = if (layers == null) layer else layers.unionAll(layer)
+        visited = visited.unionAll(next.select(keys.map(col): _*))
+        frontier = next
       }
-      val hopRows = next.select(lit(h).as("hop"), col("t").as("node_type"),
-        col("id").as("node_id"))
-      out = if (out == null) hopRows else out.unionAll(hopRows)
-      visited = visited.unionAll(next)
-      frontier = next
+      if (!release) finish(layers)
+      else {
+        val out = finish(layers).lineageCut
+        frontierTags.foreach(graft.PlanCache.drop(spark, dir, _))
+        out
+      }
     }
-    out
+  }
+
+  /** [[layeredBfs]] over a typed adjacency `adj(f_t, f_id, t_t, t_id)`
+    * from `seeds(t, id)`: each hop joins the frontier into the adjacency
+    * and `distinct()`s the neighbours; returns (hop, node_type, node_id). */
+  private def typedBfs(spark: SparkSession, dir: String, tag: String,
+      depth: Int, adj: => DataFrame, seeds: => DataFrame): DataFrame = {
+    lazy val a = adj // by-name so a memo hit builds nothing; once per BFS
+    layeredBfs(spark, dir, tag, Seq("t", "id"), depth)(seeds, frontier =>
+      a.join(frontier.select(col("t").as("f_t"), col("id").as("f_id")),
+          Seq("f_t", "f_id"))
+        .select(col("t_t").as("t"), col("t_id").as("id")).distinct())(
+      _.select(col("hop"), col("t").as("node_type"), col("id").as("node_id")))
   }
 
   /** Undirected typed adjacency of the supplier↔part graph. */
@@ -138,14 +161,10 @@ object GraphOps {
     * MaxDepth, searcher_sql.go:44). Each node appears once, at its minimum
     * hop. */
   def kHop(spark: SparkSession, dir: String, depth: Int): DataFrame = {
-    require(depth >= 1 && depth <= MaxDepth, s"depth must be in [1, $MaxDepth]")
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, s"bfs:khop:$depth", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("src") < SeedMax)
-        .select(lit("supplier").as("t"), col("src").as("id")).distinct()
-      typedBfs(spark, dir, s"bfs:khop:$depth", partAdj(e), seeds, depth, e0)
-    }
+    lazy val e = edges(spark, dir)
+    typedBfs(spark, dir, s"bfs:khop:$depth", depth, partAdj(e),
+      e.filter(col("src") < SeedMax)
+        .select(lit("supplier").as("t"), col("src").as("id")).distinct())
   }
 
   /** The depth-4 contract row for the parameterized traversal. */
@@ -156,59 +175,22 @@ object GraphOps {
     * `dependents`, searcher_types.go): hop 1 = customers depending on the
     * seed suppliers, hop 2 = other suppliers those customers also use. */
   def graphDependents(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:dependents", e0) {
-      val u = usesEdges(spark, dir)
-      val seeds = u.filter(col("supp") < SeedMax)
-        .select(lit("supplier").as("t"), col("supp").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:dependents", usesAdj(u), seeds, 2, e0)
-    }
-  }
-
-  /** Direct neighbors — the cortex `callers`/`callees` operations
-    * (searcher_types.go): depth-1 directed traversal. `callees` follows
-    * the edge direction from supplier seeds (parts they ship); `callers`
-    * reverses it from part seeds (suppliers shipping them). Both are the
-    * depth-1 specialization of the same typed BFS the deep traversals
-    * use; they carry no separate `queries` row because graph_khop /
-    * graph_implementations already oracle-check the identical hop-1
-    * plans. */
-  def graphCallees(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:callees", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("src") < SeedMax)
-        .select(lit("supplier").as("t"), col("src").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:callees",
-        e.select(lit("supplier").as("f_t"), col("src").as("f_id"),
-          lit("part").as("t_t"), col("dst").as("t_id")), seeds, 1, e0)
-    }
-  }
-
-  def graphCallers(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:callers", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("dst") < 40)
-        .select(lit("part").as("t"), col("dst").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:callers",
-        e.select(lit("part").as("f_t"), col("dst").as("f_id"),
-          lit("supplier").as("t_t"), col("src").as("t_id")), seeds, 1, e0)
-    }
+    lazy val u = usesEdges(spark, dir)
+    typedBfs(spark, dir, "bfs:dependents", 2, usesAdj(u),
+      u.filter(col("supp") < SeedMax)
+        .select(lit("supplier").as("t"), col("supp").as("id")).distinct())
   }
 
   /** `implementations` / `type-usages` analogue over the second direction
     * of the supplier↔part relation: seed parts are the "interfaces", hop 1
     * = suppliers implementing (shipping) them, hop 2 = the other parts
-    * those suppliers also ship (the usage closure). */
+    * those suppliers also ship (the usage closure). Hop 1 of this and of
+    * [[graphKhopDeep]] are the cortex `callers`/`callees` answers. */
   def graphImplementations(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, "bfs:implementations", e0) {
-      val e = edges(spark, dir)
-      val seeds = e.filter(col("dst") < 40)
-        .select(lit("part").as("t"), col("dst").as("id")).distinct()
-      typedBfs(spark, dir, "bfs:implementations", partAdj(e), seeds, 2, e0)
-    }
+    lazy val e = edges(spark, dir)
+    typedBfs(spark, dir, "bfs:implementations", 2, partAdj(e),
+      e.filter(col("dst") < 40)
+        .select(lit("part").as("t"), col("dst").as("id")).distinct())
   }
 
   /** Bounded-depth (2-hop) reachability from the seed suppliers:
@@ -263,30 +245,15 @@ object GraphOps {
 
   /** BFS path FINDING — the reference's `path` operation returns an
     * actual node sequence between two nodes (internal/graph TestBFSPath),
-    * not just counts. Deterministic construction: BFS from supplier 0
-    * with a MIN-parent recorded per node at its first hop, target = the
-    * smallest other supplier (first reached at hop 2 — in this dense
-    * bipartite graph hop 2 already closes the supplier set from any
-    * seed), path recovered by joining back through the parent pointers —
-    * joins end to end, no collect, and the min-parent tie-break makes
-    * the chosen path unique so it verifies row-for-row.
+    * not just counts. Deterministic construction: the [[pathFind]] layers
+    * from supplier 0 to depth 2, target = the smallest-id hop-2 node
+    * (another supplier; in this dense bipartite graph hop 2 already closes
+    * the supplier set from any seed), path recovered through the
+    * min-parent pointers, so it verifies row-for-row.
     */
   def graphPathFind(spark: SparkSession, dir: String): DataFrame =
-    graft.PlanCache.getOrBuild(spark, dir, "bfs:pathfind") {
-      val e = edges(spark, dir)
-      val l1 = e.filter(col("src") === 0)
-        .groupBy(col("dst").as("id")).agg(min(col("src")).as("parent"))
-      val l2 = e.join(l1.select(col("id").as("dst")), "dst")
-        .filter(col("src") =!= 0)
-        .groupBy(col("src").as("id")).agg(min(col("dst")).as("parent"))
-      val t = l2.orderBy(col("id")).limit(1)
-        .select(col("id").as("t_id"), col("parent").as("t_par"))
-      val b1 = t.join(l1, col("t_par") === col("id"))
-        .select(col("t_id"), col("id").as("p1"))
-      b1.select(lit(0).as("step"), lit("supplier").as("node_type"), lit(0L).as("node_id"))
-        .unionAll(b1.select(lit(1), lit("part"), col("p1")))
-        .unionAll(b1.select(lit(2), lit("supplier"), col("t_id")))
-    }
+    shortestPath(spark, dir, "bfs:pathfind", "supplier", 0L, 2)(
+      _.filter(col("hop") === 2).orderBy(col("id")).limit(1))
 
   /** Third edge relation: customer→part "orders" edges (customer c calls
     * part p directly if any of c's orders contains p). Used by the phased
@@ -307,95 +274,69 @@ object GraphOps {
   /** Arbitrary-endpoint shortest path over the supplier↔part graph — the
     * reference's `path` operation takes any (from, to) pair and BFSes the
     * reachable subgraph up to the depth cap
-    * (internal/graph/searcher_sql.go:270 queryPath + bfsPath:185). Layered
-    * BFS with a MIN-parent recorded per node at its first (= minimum) hop,
-    * so the recovered path is unique and verifies row-for-row; backtrack
-    * is a chain of ≤ maxDepth single-row joins through the parent
-    * pointers — joins end to end, no collect.
-    *
-    * Scale posture: each BFS layer is one shuffle join on a thin typed
-    * frontier with min-parent aggregation, layers persist through
-    * PlanCache exactly like [[typedBfs]]; the backtrack joins touch one
-    * row per step. Depth is capped at [[MaxDepth]] as in the reference.
+    * (internal/graph/searcher_sql.go:270 queryPath + bfsPath:185).
     * Returns (step, node_type, node_id) from src (step 0) to dst; empty
     * when dst is unreachable within maxDepth — the reference's "No path
     * found" response.
     */
   def pathFind(spark: SparkSession, dir: String, srcType: String, srcId: Long,
-      dstType: String, dstId: Long, maxDepth: Int): DataFrame = {
-    require(maxDepth >= 1 && maxDepth <= MaxDepth,
-      s"maxDepth must be in [1, $MaxDepth]")
-    val tag = s"bfs:path:$srcType:$srcId:$dstType:$dstId:$maxDepth"
-    // one epoch snapshot for the whole layered build (see typedBfs)
-    val e0 = graft.PlanCache.currentEpoch
-    graft.PlanCache.getOrBuildAt(spark, dir, tag, e0) {
-      val adj = partAdj(edges(spark, dir))
-      val seeds = spark.range(1)
-        .select(lit(srcType).as("t"), lit(srcId).as("id"))
-      var visited = seeds
-      var frontier = seeds
-      var reached: DataFrame = null
-      for (h <- 1 to maxDepth) {
-        // localCheckpoint truncates the per-layer lineage (see typedBfs):
-        // the backtrack below references `reached` once per step, so an
-        // uncut plan would repeat the exponential layer tree ~20×
-        val next = graft.PlanCache.getOrBuildAt(spark, dir, s"$tag:layer$h",
-            e0) {
-          adj
-            .join(frontier.select(col("t").as("f_t"), col("id").as("f_id")),
-              Seq("f_t", "f_id"))
-            // min-parent tie-break: parent = smallest (type, id) among the
-            // frontier nodes reaching this node at its minimum hop
-            .groupBy(col("t_t").as("t"), col("t_id").as("id"))
-            .agg(min(struct(col("f_t"), col("f_id"))).as("p"))
-            .select(col("t"), col("id"),
-              col("p.f_t").as("parent_t"), col("p.f_id").as("parent_id"))
-            .join(visited, Seq("t", "id"), "left_anti")
-            .lineageCut
+      dstType: String, dstId: Long, maxDepth: Int): DataFrame =
+    shortestPath(spark, dir, s"bfs:path:$srcType:$srcId:$dstType:$dstId:$maxDepth",
+      srcType, srcId, maxDepth)(
+      _.filter(col("t") === dstType && col("id") === dstId))
+
+  /** Min-parent [[layeredBfs]] from (srcType, srcId), then a backtrack from
+    * the node `pickDst` selects among the layers (hop, t, id, parent_t,
+    * parent_id). Each node records the MIN (type, id) parent among the
+    * frontier nodes reaching it at its first (= minimum) hop, so the
+    * recovered path is unique and verifies row-for-row. The backtrack is
+    * a chain of ≤ maxDepth single-row joins through the parent pointers —
+    * joins end to end, no collect. Layer lifetime, epoch and cuts:
+    * [[layeredBfs]]; its `release` applies because the result is a few
+    * rows and [[pathFind]]'s tags are per endpoint pair.
+    */
+  private def shortestPath(spark: SparkSession, dir: String, tag: String,
+      srcType: String, srcId: Long, maxDepth: Int)(
+      pickDst: DataFrame => DataFrame): DataFrame = {
+    lazy val adj = partAdj(edges(spark, dir))
+    layeredBfs(spark, dir, tag, Seq("t", "id"), maxDepth, release = true)(
+      spark.range(1).select(lit(srcType).as("t"), lit(srcId).as("id")),
+      frontier => adj
+        .join(frontier.select(col("t").as("f_t"), col("id").as("f_id")),
+          Seq("f_t", "f_id"))
+        .groupBy(col("t_t").as("t"), col("t_id").as("id"))
+        .agg(min(struct(col("f_t"), col("f_id"))).as("p"))
+        .select(col("t"), col("id"),
+          col("p.f_t").as("parent_t"), col("p.f_id").as("parent_id"))) {
+      reached =>
+        // backtrack: walk the parent chain from dst — each hop joins ONE row
+        val dst = pickDst(reached)
+        var path = dst.select(col("hop").as("step"), col("t").as("node_type"),
+          col("id").as("node_id"))
+        var cur = dst
+        for (_ <- 2 to maxDepth) {
+          val up = cur.select(col("hop").as("c_hop"),
+            col("parent_t").as("c_pt"), col("parent_id").as("c_pid"))
+          cur = reached.join(up,
+            col("hop") === col("c_hop") - 1 &&
+              col("t") === col("c_pt") && col("id") === col("c_pid"))
+            .select(col("hop"), col("t"), col("id"),
+              col("parent_t"), col("parent_id"))
+          path = path.unionAll(cur.select(col("hop").as("step"),
+            col("t").as("node_type"), col("id").as("node_id")))
         }
-        val hopRows = next.select(lit(h).as("hop"), col("t"), col("id"),
-          col("parent_t"), col("parent_id"))
-        reached = if (reached == null) hopRows else reached.unionAll(hopRows)
-        visited = visited.unionAll(next.select(col("t"), col("id")))
-        frontier = next.select(col("t"), col("id"))
-      }
-      // backtrack: walk the parent chain from dst — each hop joins ONE row
-      val dst = reached.filter(col("t") === dstType && col("id") === dstId)
-      var path = dst.select(col("hop").as("step"), col("t").as("node_type"),
-        col("id").as("node_id"))
-      var cur = dst
-      for (_ <- 2 to maxDepth) {
-        val up = cur.select(col("hop").as("c_hop"),
-          col("parent_t").as("c_pt"), col("parent_id").as("c_pid"))
-        cur = reached.join(up,
-          col("hop") === col("c_hop") - 1 &&
-            col("t") === col("c_pt") && col("id") === col("c_pid"))
-          .select(col("hop"), col("t"), col("id"),
-            col("parent_t"), col("parent_id"))
-        path = path.unionAll(cur.select(col("hop").as("step"),
-          col("t").as("node_type"), col("id").as("node_id")))
-      }
-      // the src row, emitted only if dst was reached at all
-      val full = path.unionAll(dst.select(lit(0).as("step"),
-        lit(srcType).as("node_type"), lit(srcId).as("node_id")))
-      // materialize the (≤ maxDepth+1 row) result eagerly, then RELEASE
-      // the per-layer caches: unlike the fixed-name BFS ops (one tag per
-      // (session, dir, op)), this key space is per-(src, dst, depth) —
-      // a deployment answering many distinct path queries would pin
-      // maxDepth persisted layers each and grow executor storage without
-      // bound. After the cut, the memo holds only the tiny path itself.
-      val out = full.lineageCut
-      for (h <- 1 to maxDepth)
-        graft.PlanCache.drop(spark, dir, s"$tag:layer$h")
-      out
+        // the src row, emitted only if dst was reached at all
+        path.unionAll(dst.select(lit(0).as("step"),
+          lit(srcType).as("node_type"), lit(srcId).as("node_id")))
     }
   }
 
   /** Contract row: shortest path supplier 0 → part 37 at the full depth
-    * cap. Part 37 sits at BFS distance exactly 3 from supplier 0 in the
-    * test corpus at every SF (not shipped by supplier 0 directly), so this
-    * pins the depth ≥ 3 machinery the fixed-depth graph_path_find row
-    * cannot. */
+    * cap. In the repository's sf0.001, sf0.01 and sf0.1 test corpora part
+    * 37 sits at BFS distance exactly 3 (supplier 0 does not ship it), so
+    * there this pins the depth ≥ 3 machinery the fixed-depth
+    * graph_path_find row cannot. Other corpora may place it nearer: at
+    * perfbench's scale 0.003 supplier 0 ships part 37, a 1-hop path. */
   def graphPathFindDeep(spark: SparkSession, dir: String): DataFrame =
     pathFind(spark, dir, "supplier", 0L, "part", 37L, MaxDepth)
 
@@ -699,10 +640,12 @@ object GraphOps {
     val seed = perDoc.filter(col("doc_id") % IfaceSeedStride === 0)
     val ifaces = seed.select(col("doc_id"), explode(col("strs")).as("symbol"))
     // The flattening closure is the expensive prefix (6 rounds of eager
-    // lineage-cut jobs) and its result is tiny — memoize it per
-    // (session, dir) like every other graph BFS memo, so repeated calls
-    // pay the division probe only.
-    val resolved = graft.PlanCache.getOrBuild(spark, dir, "iface:resolved") {
+    // lineage-cut jobs) and its result is tiny — memoized per (session,
+    // dir) like every other graph BFS memo, so repeated calls pay the
+    // division probe only. Layer lifetime, epoch and cuts: [[layeredBfs]].
+    lazy val roots = ifaces.select(col("doc_id").as("root_doc"),
+      col("symbol").as("root_sym"), col("doc_id"), col("symbol"))
+    lazy val embed = {
       // embed edges: (src iface doc, src iface sym) -> min seed doc
       // declaring an imported stream name; doc-level imports, so every
       // iface symbol of the importing doc embeds the same targets (the
@@ -713,30 +656,22 @@ object GraphOps {
         .join(broadcast(tmin), col("tgt") === col("dst_sym"))
         .filter(col("dst_doc") =!= col("src_doc"))
         .select(col("src_doc"), col("dst_doc"), col("dst_sym")).distinct()
-      val embed = ifaces.select(col("doc_id").as("src_doc"), col("symbol").as("src_sym"))
+      ifaces.select(col("doc_id").as("src_doc"), col("symbol").as("src_sym"))
         .join(broadcast(docEmbeds), "src_doc")
-      // Fixed-depth closure: one lineage cut per round (on the frontier
-      // only — `reach` stays a lazy union of already-cut frames, so the
-      // plan grows linearly in rounds, not exponentially).
-      var reach = ifaces.select(col("doc_id").as("root_doc"), col("symbol").as("root_sym"),
-        col("doc_id"), col("symbol"), lit(0).as("depth"))
-      var frontier = reach
-      for (round <- 1 to EmbedMaxDepth) {
-        val next = frontier
-          .join(broadcast(embed),
-            frontier("doc_id") === embed("src_doc") && frontier("symbol") === embed("src_sym"))
-          .select(col("root_doc"), col("root_sym"),
-            col("dst_doc").as("doc_id"), col("dst_sym").as("symbol"))
-          .distinct()
-          .join(reach, Seq("root_doc", "root_sym", "doc_id", "symbol"), "left_anti")
-          .withColumn("depth", lit(round))
-          .lineageCut
-        reach = reach.unionAll(next)
-        frontier = next
-      }
+    }
+    val resolved = layeredBfs(spark, dir, "iface:resolved",
+        Seq("root_doc", "root_sym", "doc_id", "symbol"), EmbedMaxDepth)(roots, frontier =>
+      frontier
+        .join(broadcast(embed),
+          frontier("doc_id") === embed("src_doc") && frontier("symbol") === embed("src_sym"))
+        .select(col("root_doc"), col("root_sym"),
+          col("dst_doc").as("doc_id"), col("dst_sym").as("symbol"))
+        .distinct()) { layers =>
       // one signature per (iface, method name): shallowest declaration
       // wins (own beats embedded), min doc_id breaks depth ties
-      reach.select(col("root_doc"), col("root_sym"), col("doc_id"), col("depth"))
+      roots.select(col("root_doc"), col("root_sym"), col("doc_id"), lit(0).as("depth"))
+        .unionAll(layers.select(col("root_doc"), col("root_sym"), col("doc_id"),
+          col("hop").as("depth")))
         .distinct()
         .join(perDoc.select(col("doc_id"), col("fns")), "doc_id")
         .select(col("root_doc").as("iface_doc"), col("root_sym").as("iface_symbol"),

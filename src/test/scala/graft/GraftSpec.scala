@@ -1676,17 +1676,59 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("callees/callers are the hop-1 slices of the deep traversals") {
-    val callees = GraphOps.graphCallees(spark, SfDir)
-      .orderBy("node_id").collect().toSeq
-    val khopHop1 = GraphOps.graphKhopDeep(spark, SfDir)
-      .filter(col("hop") === 1).orderBy("node_id").collect().toSeq
-    assert(callees == khopHop1)
-    val callers = GraphOps.graphCallers(spark, SfDir)
-      .orderBy("node_id").collect().toSeq
-    val implHop1 = GraphOps.graphImplementations(spark, SfDir)
-      .filter(col("hop") === 1).orderBy("node_id").collect().toSeq
-    assert(callers == implHop1)
+  /** Plain-Scala BFS over the collected distinct edges with the same
+    * rule as pathFind: each node keeps the MIN (type, id) parent among the
+    * frontier nodes first reaching it. Returns (step, node_type, node_id)
+    * from src to dst, empty when dst is not reached within maxDepth. */
+  private def referencePath(edges: Set[(Long, Long)], src: (String, Long),
+      dst: (String, Long), maxDepth: Int): Seq[(Int, String, Long)] = {
+    val adj = edges.toSeq.flatMap { case (s, p) =>
+      Seq((("supplier", s), ("part", p)), (("part", p), ("supplier", s)))
+    }.groupMap(_._1)(_._2)
+    val ord = Ordering[(String, Long)]
+    var hopOf = Map(src -> 0)
+    var parent = Map.empty[(String, Long), (String, Long)]
+    var frontier = Seq(src)
+    for (h <- 1 to maxDepth) {
+      val next = (for (f <- frontier; n <- adj.getOrElse(f, Nil)
+          if !hopOf.contains(n)) yield n -> f)
+        .groupMapReduce(_._1)(_._2)(ord.min)
+      hopOf ++= next.keys.map(_ -> h)
+      parent ++= next
+      frontier = next.keys.toSeq
+    }
+    if (dst == src || !hopOf.contains(dst)) Seq.empty
+    else Iterator.iterate(dst)(parent).take(hopOf(dst) + 1).toSeq
+      .map(n => (hopOf(n), n._1, n._2)).reverse
+  }
+
+  test("pathFind matches a plain-Scala min-parent BFS over the collected edges") {
+    val edges = Tables.lineitem(spark, SfDir)
+      .select(col("l_suppkey"), col("l_partkey")).distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def engine(df: DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).sortBy(_._1).toSeq
+    def check(src: (String, Long), dst: (String, Long), depth: Int) = {
+      val want = referencePath(edges, src, dst, depth)
+      val got = engine(GraphOps.pathFind(spark, SfDir, src._1, src._2,
+        dst._1, dst._2, depth))
+      assert(got == want, s"$src -> $dst at depth $depth")
+      want
+    }
+    val s0 = ("supplier", 0L)
+    // part 37 is at distance 3 here: empty below depth 3, one path above
+    val deep = (1 to GraphOps.MaxDepth).map(d => check(s0, ("part", 37L), d))
+    assert(deep.take(2).forall(_.isEmpty) && deep.drop(2).forall(_.size == 4))
+    val s0Parts = edges.collect { case (0L, p) => p }
+    assert(check(s0, ("part", s0Parts.min), GraphOps.MaxDepth).size == 2)
+    val farSupplier = edges.map(_._1).max
+    assert(check(("part", 37L), ("supplier", farSupplier), GraphOps.MaxDepth)
+      .nonEmpty)
+    assert(check(s0, ("part", Long.MaxValue), GraphOps.MaxDepth).isEmpty)
+    // graph_path_find: the same BFS to the smallest hop-2 supplier
+    val target = edges.collect { case (s, p) if s != 0L && s0Parts(p) => s }.min
+    assert(engine(GraphOps.graphPathFind(spark, SfDir)) ==
+      referencePath(edges, s0, ("supplier", target), 2))
   }
 
   test("deep path find walks real edges from supplier 0 to part 37") {
