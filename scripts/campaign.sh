@@ -13,6 +13,11 @@
 #   heavies:<sf>  graft.Bench over the pair-generating heavies, tagged
 #                 <sf>-heavies (docs/bench_full_<sf>-heavies.json)
 #   plans:<tag>   final plans at sf0.01 into plans/<tag>/<query>_after.txt
+#   compare:<rev>:<sf>
+#                 same outputs A/B: graft.Verify at git revision <rev>
+#                 (exported with git archive into $TMPDIR, default /tmp)
+#                 and at the working tree, then check_oracle.py --compare
+#                 on the two dumps; exits non-zero if any query differs
 #   clean         drop the derived-table warehouse so indexes rebuild
 # <sf> is sf0.001, sf0.01 or sf0.1 (under $TESTDATA) or a ScaleUp corpus.
 #
@@ -79,6 +84,17 @@ for step in "$@"; do
         run graft.Bench $HEAVIES 2>&1 | grep "bench-full" | tail -1
       ;;
     plans:*) bash scripts/capture_plans.sh "$arg" after "$(corpus_dir sf0.01)" ;;
+    compare:*)
+      rev=${arg%%:*}; sf=${arg#*:}; dir=$(corpus_dir "$sf")
+      tmp=${TMPDIR:-/tmp}; short=$(git rev-parse --short "$rev")
+      tree=$tmp/graft-compare-$short
+      base=$tmp/verify_${sf}_$short; work=$tmp/verify_${sf}_work
+      rm -rf "$tree" "$base" "$work"; mkdir -p "$tree"
+      git archive "$rev" | tar -x -C "$tree"
+      (cd "$tree" && run graft.Verify "$dir" "$base") 2>&1 | grep "\[verify\]" || true
+      run graft.Verify "$dir" "$work" 2>&1 | grep "\[verify\]" || true
+      python3 scripts/check_oracle.py --compare "$base" "$work"
+      ;;
     clean) rm -rf spark-warehouse ;;
     *) echo "unknown step '$step'" >&2; exit 2 ;;
   esac

@@ -18,22 +18,12 @@ object Tables {
     * driver-side job) on EVERY call, and the sweep constructs ~129 plans
     * per pass with several table reads each — measured 0.1-0.2 s of
     * per-query construct time, none of it data work. The memoized
-    * DataFrame pins only the resolved relation (file index + schema);
-    * every execution still scans the parquet fresh. Same lifecycle as
-    * IndexStore's sizing memos: swept by the data-changed invalidation
-    * hook, so a corpus rewritten in place re-resolves on next use. At
-    * cluster scale this is what a catalog table does — resolve once,
-    * scan per query. */
-  private val loaded = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  locally {
-    PlanCache.onInvalidate {
-      case Some(d) => loaded.keySet.removeIf(_._2 == d); ()
-      case None => loaded.clear()
-    }
-  }
-
+    * DataFrame pins only the resolved relation (file index + schema) and
+    * is NOT persisted: every execution still scans the parquet fresh. It
+    * is a PlanCache memo like every other reuse-until-the-data-changes
+    * value, so a corpus rewritten in place re-resolves after
+    * PlanCache.invalidate(dir). At cluster scale this is what a catalog
+    * table does — resolve once, scan per query. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       // virtual views the DSL can query like stored tables — the six
@@ -57,30 +47,8 @@ object Tables {
         if (spark.conf.getOption("spark.sql.parquet.inferTimestampNTZ.enabled")
             .forall(_ != "false"))
           spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        // Lifecycle note (shared with PlanCache): eviction keys off the
-        // session's CONTEXT being stopped, so newSession() clones sharing
-        // a live context accumulate entries for the context's lifetime —
-        // a long-lived multi-session deployment should route clones
-        // through one canonical session or call PlanCache.invalidate()
-        // on clone teardown. Embedding callers that rewrite a corpus dir
-        // in place must call PlanCache.invalidate(dir) (the watch loop's
-        // per-batch hook) or this memo serves the pre-rewrite listing.
-        loaded.keySet.removeIf(_._1.sparkContext.isStopped)
-        // get + putIfAbsent, NOT computeIfAbsent: the builder runs a
-        // driver-side Spark job (directory listing + footer schema read)
-        // and computeIfAbsent would hold the map's bin lock across it,
-        // serializing concurrent first loads that hash to the same bin —
-        // the same rule PlanCache documents. A racing duplicate
-        // resolution is cheap and side-effect free; the loser's
-        // DataFrame is simply dropped.
-        val key = (spark, dir, name)
-        val hit = loaded.get(key)
-        if (hit != null) hit
-        else {
-          val resolved = spark.read.parquet(s"$dir/$name.parquet")
-          val prev = loaded.putIfAbsent(key, resolved)
-          if (prev != null) prev else resolved
-        }
+        PlanCache.memo(spark, dir, s"scan:$name")(
+          spark.read.parquet(s"$dir/$name.parquet"))(_ => ())
     }
 
   /** The reference's `files` table shape (internal/storage/schema.go;

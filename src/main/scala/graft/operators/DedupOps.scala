@@ -274,9 +274,9 @@ object DedupOps {
     require(cap >= 0, s"$IncrBroadcastDocsConf must be >= 0, got $cap")
     // churn census: one pushed-filter count over the doc_id column — the
     // routing scalar, same posture as vec_knn_join_auto's cell census.
-    // Memoized per dir in IndexStore (next to maxCellSize, swept by the
-    // same data-changed hook): plan construction must stay lazy, and the
-    // census is a property of the corpus, not of this call.
+    // A PlanCache memo (IndexStore.churnDocs, next to maxCellSize): plan
+    // construction must stay lazy, and the census is a property of the
+    // corpus, not of this call.
     val churnDocs =
       graft.sources.IndexStore.churnDocs(spark, dir, IncrMod, IncrRes)
     val probe = newBands.select(col("doc_id").as("a_id"),

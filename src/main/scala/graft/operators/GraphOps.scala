@@ -77,7 +77,7 @@ object GraphOps {
     *
     *  - Frontier lifetime: each layer persists through PlanCache as
     *    `$tag:frontier$h` (not a bare .persist()), so hop h+1 never
-    *    re-derives hops 1..h and invalidate() releases the layers with
+    *    re-derives hops 1..h and invalidate(dir) releases the layers with
     *    the memoized output instead of pinning executor storage for the
     *    session lifetime. A fixed tag builds its layers at most once per
     *    (session, dir). `release` is for per-query tags (one per

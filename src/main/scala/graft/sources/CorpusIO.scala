@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 import graft.Tables
 
 /** Corpus ingestion beyond parquet: JSONL (one JSON object per line) is
@@ -40,54 +41,39 @@ object CorpusIO {
     df.select(col("doc_id"), col("text"), col("lang"), col("source"),
       col("n_chars")).write.mode("overwrite").json(path)
 
-  /** One JSONL copy per (session, dir): Bench invokes every query twice
-    * (warm + timed) and Verify once more — a fresh per-invocation temp
-    * dir accumulated corpus-sized copies under /tmp indefinitely. The
-    * memo reuses the session's copy (concurrent sessions still get their
-    * own entries, preserving the no-overwrite property), and a JVM
-    * shutdown hook removes everything written. Entries follow the SAME
-    * invalidation protocol as persisted plans: a
-    * PlanCache.invalidate(dir) sweep (the watch loop's
-    * data-changed hook) deletes the copy, so a rewritten documents table
-    * is re-serialized instead of read stale. No stopped-session
-    * eviction: the shutdown hook needs the paths, and the map is bounded
-    * by (sessions × dirs). */
-  private val jsonlCopies =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  /** Every JSONL copy lives under one per-JVM temp root, which one
+    * shutdown hook removes, so no corpus-sized copy outlives the JVM —
+    * including copies of stopped sessions, which the memo evicts without
+    * release. */
+  private lazy val jsonlRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_jsonl_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try deleteTree(root) catch { case NonFatal(_) => () },
+      "graft-jsonl-cleanup"))
+    root
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root))
+      java.nio.file.Files.walk(root)
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(q => java.nio.file.Files.deleteIfExists(q))
+
+  /** One JSONL copy per (session, dir), a PlanCache memo released by
+    * deleting the copy: concurrent sessions get their own copies (no
+    * overwrite under a reader), and PlanCache.invalidate(dir) deletes
+    * every session's copy, so a rewritten documents table is
+    * re-serialized instead of read stale. */
+  private def jsonlCopy(spark: SparkSession, dir: String): String =
+    graft.PlanCache.memo(spark, dir, "jsonlCopy") {
+      val t = java.nio.file.Files.createTempDirectory(jsonlRoot, "copy_")
+      writeDocumentsJsonl(Tables.documents(spark, dir), t.toString)
+      t.toString
+    }(t => deleteTree(java.nio.file.Paths.get(t)))
 
   /** Test hook: the memoized copy location, if one exists. */
   private[graft] def jsonlCopyFor(spark: SparkSession, dir: String): Option[String] =
-    Option(jsonlCopies.get((spark, dir)))
-
-  private def deleteTree(p: String): Unit =
-    try {
-      val root = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(q => java.nio.file.Files.deleteIfExists(q))
-    } catch { case _: Throwable => () }
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      jsonlCopies.values.forEach(deleteTree(_))
-    }, "graft-jsonl-cleanup"))
-    // Deliberately CROSS-SESSION: PlanCache.invalidate(dir) means "the
-    // data under dir changed on disk", which makes every session's JSONL
-    // copy of that dir stale — a session-scoped sweep would leave other
-    // sessions serving round-trips of the old corpus. The cost is that a
-    // sibling session mid-read over its (now deleted) copy fails and must
-    // re-run — the correct outcome for a query over invalidated data, and
-    // the same contract Spark applies to a table whose files are swapped
-    // mid-scan. computeIfAbsent rebuilds the copy on next use.
-    graft.PlanCache.onInvalidate { dir =>
-      val it = jsonlCopies.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (dir.forall(_ == e.getKey._2)) { deleteTree(e.getValue); it.remove() }
-      }
-    }
-  }
+    graft.PlanCache.lookup(spark, dir, "jsonlCopy").map(_.asInstanceOf[String])
 
   /** Ingestion fidelity check as an oracle-checked operator: round-trip
     * the documents table through JSONL, then aggregate per source an
@@ -99,15 +85,9 @@ object CorpusIO {
     *
     * Deliberately EAGER: the JSONL copy is written when the operator is
     * first invoked for a (session, dir) — the read needs the files to
-    * exist — then memoized (see [[jsonlCopies]]). */
+    * exist — then memoized (see [[jsonlCopy]]). */
   def ingestJsonl(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = jsonlCopies.computeIfAbsent((spark, dir), _ => {
-      val t = java.nio.file.Files
-        .createTempDirectory("graft_jsonl_").toString
-      writeDocumentsJsonl(Tables.documents(spark, dir), t)
-      t
-    })
-    readDocumentsJsonl(spark, tmp)
+    readDocumentsJsonl(spark, jsonlCopy(spark, dir))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("chars"),

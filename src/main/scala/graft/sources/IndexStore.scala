@@ -4,8 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Storage layout for the materialized index: bucketed (and optionally
-  * partition-pruned) parquet tables.
+/** Storage layout for the materialized index: bucketed parquet tables,
+  * resolved through one table registry ([[derivedBucketed]]).
   *
   * Reference analogue: project-cortex persists its index into SQLite tables
   * keyed by chunk/file id (internal/storage/schema.go:157). At cluster
@@ -64,21 +64,17 @@ object IndexStore {
       n
     }
 
-  /** memoized per-dir source bytes: one FS listing, stable for a corpus.
-    * Counts documents.parquet + embeddings.parquet (file- or dir-shaped)
-    * — the relations the bucketed tables derive from. Swept by the
-    * data-changed invalidation hook (see the `locally` block below), so a
-    * corpus rewritten in place re-sizes from its CURRENT bytes on the
-    * next build instead of keeping the first-seen count for the JVM's
-    * lifetime. */
-  private val dirBytes = new ConcurrentHashMap[String, java.lang.Long]()
-
+  /** Source bytes of `dir`: one FS listing, memoized in PlanCache until
+    * the data under `dir` changes. Counts documents.parquet +
+    * embeddings.parquet (file- or dir-shaped) — the relations the
+    * bucketed tables derive from — so a corpus rewritten in place
+    * re-sizes from its CURRENT bytes after PlanCache.invalidate(dir). */
   private def corpusBytes(spark: SparkSession, dir: String): Long =
-    dirBytes.computeIfAbsent(dir, { d =>
-      val fs = new org.apache.hadoop.fs.Path(d)
+    graft.PlanCache.memo(spark, dir, "sizing:corpusBytes") {
+      val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sum = Seq("documents.parquet", "embeddings.parquet").map { name =>
-        val p = new org.apache.hadoop.fs.Path(d, name)
+      Seq("documents.parquet", "embeddings.parquet").map { name =>
+        val p = new org.apache.hadoop.fs.Path(dir, name)
         if (!fs.exists(p)) 0L
         else {
           val st = fs.getFileStatus(p)
@@ -89,57 +85,33 @@ object IndexStore {
           else st.getLen
         }
       }.sum
-      java.lang.Long.valueOf(sum)
-    })
+    }(_ => ())
 
-  /** memoized per-dir hottest-IVF-cell size — the census the auto LSH
-    * geometry derives its signature width from (see
+  /** The hottest IVF cell's size — the census the auto LSH geometry
+    * derives its signature width from (see
     * [[graft.operators.DedupOps.lshGeometry]]). One thin aggregate over
     * the embeddings table, collected as a driver-side scalar (a sizing
-    * decision, not data), then stable for the corpus until the
-    * data-changed invalidation sweeps it. */
-  private val dirMaxCell = new ConcurrentHashMap[String, java.lang.Long]()
-
+    * decision, not data), memoized in PlanCache until the data changes. */
   def maxCellSize(spark: SparkSession, dir: String): Long =
-    dirMaxCell.computeIfAbsent(dir, { d =>
-      val rows = graft.Tables.embeddings(spark, d)
+    graft.PlanCache.memo(spark, dir, "sizing:maxCellSize") {
+      val rows = graft.Tables.embeddings(spark, dir)
         .groupBy(col("label")).agg(count(lit(1)).as("n"))
         .agg(max(col("n"))).collect()
-      java.lang.Long.valueOf(
-        if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0))
-    })
+      if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
+    }(_ => ())
 
-  /** memoized per-(dir, mod, res) churn-slice doc count — the routing
-    * scalar dedup_incremental's broadcast-vs-shuffle decision reads (see
-    * [[graft.operators.DedupOps.incrementalCandidates]]). Memoized here,
-    * not computed per plan construction: the count is one pushed-filter
-    * scan of the doc_id column, but an EAGER action inside a
-    * plan-building call would otherwise re-run it every time a test or
-    * plan inspection rebuilds the candidates. Same lifecycle as
-    * [[maxCellSize]]: swept by the data-changed invalidation hook. */
-  private val dirChurn = new ConcurrentHashMap[(String, Int, Int), java.lang.Long]()
-
+  /** The churn slice's doc count — the routing scalar dedup_incremental's
+    * broadcast-vs-shuffle decision reads (see
+    * [[graft.operators.DedupOps.incrementalCandidates]]). Memoized, not
+    * computed per plan construction: the count is one pushed-filter scan
+    * of the doc_id column, but an EAGER action inside a plan-building
+    * call would otherwise re-run it every time a test or plan inspection
+    * rebuilds the candidates. Same lifecycle as [[maxCellSize]]. */
   def churnDocs(spark: SparkSession, dir: String, mod: Int, res: Int): Long =
-    dirChurn.computeIfAbsent((dir, mod, res), { k =>
-      java.lang.Long.valueOf(graft.Tables.documents(spark, k._1)
-        .filter(col("doc_id") % mod === res).count())
-    })
-
-  locally {
-    // data-changed hook: PlanCache.invalidate(dir) means "the data under
-    // dir changed on disk" (the watch loop's per-micro-batch sweep), so
-    // every per-dir sizing memo re-derives from current bytes next use.
-    // Cheap to rebuild (one FS listing / one thin aggregate), so the
-    // sweep is unconditional — unlike the derived TABLES, which only
-    // invalidateDerived drops (an explicit, session-carrying call).
-    graft.PlanCache.onInvalidate {
-      case Some(d) =>
-        dirBytes.remove(d); dirMaxCell.remove(d)
-        dirChurn.keySet.removeIf(_._1 == d); ()
-      case None =>
-        dirBytes.clear(); dirMaxCell.clear(); dirChurn.clear()
-    }
-  }
+    graft.PlanCache.memo(spark, dir, s"sizing:churnDocs:$mod:$res") {
+      graft.Tables.documents(spark, dir).filter(col("doc_id") % mod === res)
+        .count()
+    }(_ => ())
 
   private def pow2ceil(n: Long): Int = {
     var p = 1
@@ -208,13 +180,6 @@ object IndexStore {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(table)
 
-  /** Write `df` partitioned by a low-cardinality column (e.g. lang) so
-    * tag-filtered scans prune whole directories. */
-  def writePartitioned(df: DataFrame, table: String, partCol: String): Unit =
-    df.write.mode("overwrite").format("parquet")
-      .partitionBy(partCol)
-      .saveAsTable(table)
-
   /** Drop `table` from the catalog AND clear its physical warehouse
     * location — a later saveAsTable under the same name must not fail
     * with LOCATION_ALREADY_EXISTS against a dir that outlived a previous
@@ -236,21 +201,26 @@ object IndexStore {
     df.write.mode("overwrite").format("parquet").saveAsTable(table)
   }
 
-  /** Per-key build monitors: get+putIfAbsent alone would let two threads
-    * race the DROP + path-delete + saveAsTable sequence for the SAME key
-    * (one thread's write fails under the other's cleanup) — table writes
-    * are not idempotent mid-flight. Monitors are reentrant for a thread
-    * and independent across keys, so a build that re-enters through a
-    * DIFFERENT key (the computeIfAbsent "Recursive update" hazard) still
-    * cannot deadlock a single map. computeIfAbsent here is safe: the
-    * closure allocates an Object, touching nothing. */
-  private val buildLocks = new ConcurrentHashMap[Any, Object]()
+  /** Per-table build monitors: a registry check alone would let two
+    * threads race the drop + saveAsTable sequence for the SAME table (one
+    * thread's write fails under the other's cleanup) — table writes are
+    * not idempotent mid-flight. Monitors are reentrant for a thread and
+    * independent across tables, so a build that resolves another table
+    * (a nested derivedBucketed) takes that table's monitor and cannot
+    * deadlock. computeIfAbsent here is safe: the closure allocates an
+    * Object, touching nothing. */
+  private val buildLocks = new ConcurrentHashMap[String, Object]()
 
-  private def withBuildLock[T](key: Any)(body: => T): T =
-    buildLocks.computeIfAbsent(key, _ => new Object).synchronized(body)
+  private def withBuildLock[T](table: String)(body: => T): T =
+    buildLocks.computeIfAbsent(table, _ => new Object).synchronized(body)
 
-  private val derived =
-    new ConcurrentHashMap[(SparkSession, String, String), String]()
+  /** The one table registry: (session, dir, table) for every bucketed
+    * table this process resolved — the search index and the derived
+    * dedup/ANN relations. Tables are not PlanCache memos: a cached
+    * `repartition` does NOT survive the self-join's column rename
+    * (verified while building the search index); bucketed tables do. */
+  private val registry =
+    ConcurrentHashMap.newKeySet[(SparkSession, String, String)]()
 
   /** The catalog name [[derivedBucketed]] gives the (dir, tag) derived
     * table — the single source of the naming scheme; probes and tests
@@ -268,88 +238,69 @@ object IndexStore {
   /** Materialize a derived relation (a signature/band/prefix index) ONCE
     * per (session, dir) as a bucketed table and return its name. The
     * dedup candidate self-joins read these tables from both sides
-    * co-located — the same design as the search index tables, applied to
-    * the relations the dedup family self-joins. A cached `repartition`
-    * does NOT survive the self-join's column rename (verified while
-    * building the search index); bucketed tables do, which is why these
-    * are tables and not PlanCache entries.
-    *
-    * Reuse rule mirrors [[index]]: if the catalog already has the table
-    * (another session on this warehouse built it), reuse it rather than
-    * dropping it out from under that session's queries.
-    */
+    * co-located — the same design as the search [[index]], whose tables
+    * are built through the same registry. */
   def derivedBucketed(spark: SparkSession, dir: String, tag: String,
       bucketCols: Seq[String])
-      (build: => DataFrame): String = {
+      (build: => DataFrame): String =
+    bucketed(spark, dir, n => derivedTableName(dir, s"${tag}_b$n"),
+      bucketCols)(build)
+
+  /** Resolve the table `name(buckets)` — the bucket count is part of the
+    * table identity — building it under its monitor on first use.
+    * Reuse rule: if the catalog already has the table (another session
+    * on this warehouse built it), reuse it rather than dropping it out
+    * from under that session's queries; otherwise clear a previous
+    * PROCESS's physical leftovers and write it. */
+  private def bucketed(spark: SparkSession, dir: String, name: Int => String,
+      bucketCols: Seq[String])(build: => DataFrame): String = {
     val n = buckets(spark, dir)
-    val btag = s"${tag}_b$n" // bucket count is part of the table identity
-    derived.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // get + putIfAbsent, NOT computeIfAbsent: build closures may resolve
-    // dependencies through caches (the PlanCache reentrancy rule)
-    val key = (spark, dir, btag)
-    val existing = derived.get(key)
-    if (existing != null) existing
-    else withBuildLock(key) {
-      val again = derived.get(key)
-      if (again != null) again
-      else {
-        val tbl = derivedTableName(dir, btag)
+    val tbl = name(n)
+    registry.removeIf(_._1.sparkContext.isStopped)
+    val key = (spark, dir, tbl)
+    if (!registry.contains(key)) withBuildLock(tbl) {
+      if (!registry.contains(key)) {
         if (!spark.catalog.tableExists(tbl)) {
-          // clear a previous PROCESS's physical leftovers before writing
-          val wh = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"))
-          val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val p = new org.apache.hadoop.fs.Path(wh, tbl.toLowerCase)
-          if (fs.exists(p)) fs.delete(p, true)
+          dropTable(spark, tbl)
           writeBucketedMulti(build, tbl, bucketCols, n)
         }
-        derived.put(key, tbl)
-        tbl
+        registry.add(key)
       }
     }
+    tbl
   }
 
-  /** Drop every derived bucketed table built over `dir` (all sessions'
-    * registry entries and the physical tables). The data-changed hook for
-    * the dedup/ANN index relations — pairs with PlanCache.invalidate(dir),
-    * which alone only releases PERSISTED relations: without this call the
-    * derived tables would keep answering from the pre-change snapshot.
+  /** "The data under `dir` changed": drop every registry table built over
+    * `dir` (all sessions' entries and the physical tables, the search
+    * index included), then [[graft.PlanCache.invalidate]] the dir's
+    * memos. PlanCache.invalidate(dir) alone — the watch loop's per-batch
+    * call — releases memos only; without this call the tables would keep
+    * answering from the pre-change snapshot.
     *
-    * Each key's drop runs under that key's build monitor: without it the
-    * DROP could land mid-write under an in-flight derivedBucketed (table
-    * writes are not idempotent mid-flight), or sweep BETWEEN the
-    * builder's table write and its registry put — leaving the registry
-    * pointing at a dropped table for the rest of the process. Serialized,
-    * an in-flight build completes first and its (pre-change) table is
-    * then dropped; a build arriving after sees an empty registry and
-    * rebuilds fresh. Residual (accepted): a build whose registry put
-    * lands after this sweep's weakly-consistent iteration snapshot can
-    * survive with pre-change data until the NEXT invalidation — the
-    * watch loop invalidates per micro-batch, so the staleness horizon is
-    * one batch; full closure would need the PlanCache epoch scheme. */
-  def invalidateDerived(spark: SparkSession, dir: String): Unit = {
-    // re-derive auto sizing (buckets, LSH width, churn) from the corpus's
-    // new state
-    dirBytes.remove(dir)
-    dirMaxCell.remove(dir)
-    dirChurn.keySet.removeIf(_._1 == dir)
-    val it = derived.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._2 == dir) withBuildLock(e.getKey) {
-        try spark.sql(s"DROP TABLE IF EXISTS ${e.getValue}")
-        catch { case _: Throwable => () }
-        it.remove()
+    * Each table's drop runs under its build monitor, so it never lands
+    * mid-write under an in-flight build, nor between a build's write and
+    * its registry add: an in-flight build completes first and its
+    * (pre-change) table is then dropped; a build arriving after rebuilds
+    * fresh. A failed drop propagates (the memos are swept regardless) and
+    * keeps its registry entry, so a retried call drops it again — a
+    * dropped entry would leave the table in the catalog, where the next
+    * build reuses it as current. Residual (accepted): a build whose registry add lands after this
+    * sweep's weakly-consistent iteration can survive with pre-change data
+    * until the NEXT invalidation. */
+  def invalidateDerived(spark: SparkSession, dir: String): Unit =
+    try registry.forEach { key =>
+      if (key._2 == dir) withBuildLock(key._3) {
+        dropTable(spark, key._3)
+        registry.remove(key)
       }
-    }
-  }
+    } finally graft.PlanCache.invalidate(dir)
 
   /** The materialized search index for one corpus dir. */
   final case class IndexTables(docs: String, embById: String,
       embByLabel: String)
 
-  private val built =
-    new ConcurrentHashMap[(SparkSession, String, Int), IndexTables]()
+  private def indexTableName(dir: String, kind: String)(n: Int): String =
+    s"graft_$kind" + dir.replaceAll("[^a-zA-Z0-9]", "_") + s"_b$n"
 
   /** Build (once per session+dir) the bucketed search index the query
     * operators read — the cortex index-build step (chunk → tokenize →
@@ -366,90 +317,21 @@ object IndexStore {
     * 100 TB that turns the two fact-fact search joins from full shuffles
     * of both relations into co-located per-bucket joins.
     */
-  def index(spark: SparkSession, dir: String): IndexTables = {
-    built.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    // per-key monitor, NOT computeIfAbsent: nested computeIfAbsent on a
-    // ConcurrentHashMap is a bin-layout-dependent "Recursive update"
-    // crash (the PlanCache rule), while a bare get+putIfAbsent would let
-    // two threads race the DROP + delete + write sequence — the monitor
-    // serializes same-key builds and stays reentrant across keys.
-    val n = buckets(spark, dir)
-    val key = (spark, dir, n)
-    val existing = built.get(key)
-    if (existing != null) existing
-    else withBuildLock(key) {
-      val again = built.get(key)
-      if (again != null) again
-      else buildIndex(spark, dir, key)
-    }
-  }
+  def index(spark: SparkSession, dir: String): IndexTables =
+    IndexTables(docsTable(spark, dir),
+      bucketed(spark, dir, indexTableName(dir, "emb_id"), Seq("vec_id"))(
+        graft.Tables.embeddings(spark, dir)),
+      bucketed(spark, dir, indexTableName(dir, "emb_lbl"), Seq("label"))(
+        graft.Tables.embeddings(spark, dir)))
 
   /** Just the pre-tokenized docs table of [[index]] — buildable for a
     * docs-only corpus (no embeddings.parquet required), which the
     * token-array consumers (symbol extraction, FTS token scoring, BPE
     * apply, winnowing) need: their test fixtures and docs-only corpora
-    * must not fail on the embedding relations they never read. The name
-    * is IDENTICAL to index()'s docs table, so whichever builder runs
-    * first the other reuses the same table. */
-  def docsTable(spark: SparkSession, dir: String): String = {
-    val n = buckets(spark, dir)
-    val t = tableNames(dir, n)
-    // same monitor key as index(): the two builders write the same docs
-    // table and must serialize against each other, not just themselves
-    withBuildLock((spark, dir, n)) {
-      if (!spark.catalog.tableExists(t.docs)) {
-        clearStale(spark, Seq(t.docs))
-        writeBucketed(tokenizedDocs(spark, dir), t.docs, "doc_id", n)
-      }
-    }
-    t.docs
-  }
-
-  private def tableNames(dir: String, n: Int): IndexTables = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_") + s"_b$n"
-    IndexTables(s"graft_docs$tag", s"graft_emb_id$tag", s"graft_emb_lbl$tag")
-  }
-
-  private def tokenizedDocs(spark: SparkSession, dir: String): DataFrame =
-    graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        graft.functions.Tokenize.tokens(col("text")).as("toks"))
-
-  /** Drop lingering catalog entries AND physical leftovers for `names` —
-    * a prior PROCESS's warehouse dir may survive while this catalog is
-    * empty, and saveAsTable then fails with LOCATION_ALREADY_EXISTS. */
-  private def clearStale(spark: SparkSession, names: Seq[String]): Unit = {
-    val wh = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"))
-    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    names.foreach { name =>
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val p = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
-
-  private def buildIndex(spark: SparkSession, dir: String,
-      key: (SparkSession, String, Int)): IndexTables = {
-      val n = key._3
-      val t = tableNames(dir, n)
-      // if another session sharing this catalog already built the index
-      // for this dir, REUSE it; dropping here would yank tables out from
-      // under that session's running queries. The docs table may exist
-      // alone (docsTable builds it independently) — build only what is
-      // missing.
-      if (!spark.catalog.tableExists(t.docs))
-        clearStale(spark, Seq(t.docs))
-      if (!Seq(t.embById, t.embByLabel).forall(spark.catalog.tableExists))
-        clearStale(spark, Seq(t.embById, t.embByLabel))
-      if (!spark.catalog.tableExists(t.docs))
-        writeBucketed(tokenizedDocs(spark, dir), t.docs, "doc_id", n)
-      if (!Seq(t.embById, t.embByLabel).forall(spark.catalog.tableExists)) {
-        val emb = graft.Tables.embeddings(spark, dir)
-        writeBucketed(emb, t.embById, "vec_id", n)
-        writeBucketed(emb, t.embByLabel, "label", n)
-      }
-      built.put(key, t)
-      t
-  }
+    * must not fail on the embedding relations they never read. */
+  def docsTable(spark: SparkSession, dir: String): String =
+    bucketed(spark, dir, indexTableName(dir, "docs"), Seq("doc_id"))(
+      graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
+          graft.functions.Tokenize.tokens(col("text")).as("toks")))
 }

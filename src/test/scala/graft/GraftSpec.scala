@@ -2052,6 +2052,71 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
     assert(operators.DedupOps.simhashCandidates(spark, SfDir).count() > 0)
   }
 
+  test("invalidateDerived rebuilds the search index over a rewritten corpus") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-reindex").toString
+    val emb = Tables.embeddings(spark, SfDir)
+    Tables.documents(spark, SfDir).write.parquet(s"$dir/documents.parquet")
+    emb.write.parquet(s"$dir/embeddings.parquet")
+    val before = spark.table(IndexStore.index(spark, dir).embByLabel).count()
+    assert(before == emb.count())
+    // rewrite the embeddings in place: every vector twice
+    emb.union(emb).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    IndexStore.invalidateDerived(spark, dir)
+    assert(spark.table(IndexStore.index(spark, dir).embByLabel).count() ==
+      2 * before, "the index must be rebuilt from the rewritten embeddings")
+    IndexStore.invalidateDerived(spark, dir)
+  }
+
+  test("concurrent derivedBucketed calls for one key write one table once") {
+    // no corpus files: the bucket count sizes to the floor from 0 bytes
+    val dir = java.nio.file.Files.createTempDirectory("graft-race").toString
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[String] {
+          def call(): String = {
+            start.await()
+            IndexStore.derivedBucketed(spark, dir, "race", Seq("k")) {
+              builds.incrementAndGet()
+              spark.range(100).toDF("k")
+            }
+          }
+        })
+      }
+      start.countDown()
+      val names = calls.map(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(names.toSet.size == 1, names)
+      assert(builds.get == 1, "the table must be written once")
+      assert(spark.table(names.head).count() == 100)
+    } finally {
+      pool.shutdown()
+      IndexStore.invalidateDerived(spark, dir)
+    }
+  }
+
+  test("an invalidate inside a value memo's build installs nothing") {
+    val dir = "/tmp/graft_memo_test"
+    PlanCache.invalidate(dir)
+    var builds = 0
+    var released = List.empty[Long]
+    def get(): Long = PlanCache.memo(spark, dir, "memo:v") {
+      builds += 1
+      // the watch loop's per-batch invalidate lands mid-build
+      if (builds == 1) PlanCache.invalidate(dir)
+      builds * 10L
+    }(v => released ::= v)
+    assert(get() == 10, "the in-flight caller still gets its value")
+    assert(PlanCache.lookup(spark, dir, "memo:v").isEmpty,
+      "a value built across an invalidation must not be installed")
+    assert(released == List(10L), "the value the store does not keep is released")
+    assert(get() == 20 && builds == 2, "the next call rebuilds")
+    assert(get() == 20 && builds == 2, "and that build is the memo")
+    PlanCache.invalidate(dir)
+    assert(released == List(20L, 10L))
+  }
+
   test("chained builds share one epoch snapshot: mid-chain invalidate " +
       "suppresses later layers' installs") {
     val dir = "/tmp/graft_epoch_test"
@@ -2258,17 +2323,6 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact intersect ann).size.toDouble / exact.size
     assert(recall >= 0.9, s"ANN recall $recall over ${exact.size} exact pairs")
-  }
-
-  test("partitioned store prunes by the partition column") {
-    IndexStore.writePartitioned(
-      Tables.documents(spark, SfDir).select(col("doc_id"), col("n_chars"), col("lang")),
-      "docs_part", "lang")
-    val q = spark.table("docs_part").filter(col("lang") === "en")
-    val scan = q.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") || q.count() > 0)
-    assert(q.count() == Tables.documents(spark, SfDir)
-      .filter(col("lang") === "en").count())
   }
 }
 
