@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage cuts for iterative operators (BFS layers, label propagation,
   * BPE merge rounds, PQ training): each round's plan references the prior
@@ -17,6 +19,11 @@ import org.apache.spark.sql.DataFrame
   * the same switch a 1000-executor BFS over the 100 TB edge table needs,
   * where a multi-hour query restart costs more than the checkpoint
   * writes. Read per cut, so a conf change applies from the next round on.
+  *
+  * Each cut records the read set of the plan it cut (see
+  * [[PlanCache.Reads]]), so a memo built over a cut still knows which
+  * tables it came from and a table-scoped sweep keeps it when another
+  * table changes.
   */
 object Checkpoints {
   /** When set (runtime-settable), lineage cuts write reliable checkpoints
@@ -46,15 +53,32 @@ object Checkpoints {
     if (!installedParent.contains(want)) sc.setCheckpointDir(dir)
   }
 
+  /** The read set of each cut's plan, by the cut's RDD (compared by
+    * identity; an entry lives as long as a plan still holds its RDD). */
+  private val cutReads = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], PlanCache.Reads]())
+
+  /** The read set recorded for the cut that produced `rdd`; unknown
+    * (None) for an RDD no cut produced. */
+  private[graft] def readsOfCut(rdd: RDD[_]): PlanCache.Reads =
+    Option(cutReads.get(rdd)).flatten
+
   /** Cut `df`'s lineage, eagerly: reliable `checkpoint()` when
     * [[DirConf]] is set, `localCheckpoint()` otherwise. */
-  def cut(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption(DirConf).filter(_.nonEmpty) match {
+  def cut(df: DataFrame): DataFrame = {
+    val reads = PlanCache.readsOf(df.queryExecution.analyzed)
+    val out = df.sparkSession.conf.getOption(DirConf).filter(_.nonEmpty) match {
       case Some(dir) =>
         ensureDir(df, dir)
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(eager = true)
     }
+    out.queryExecution.analyzed.foreach {
+      case r: LogicalRDD => cutReads.put(r.rdd, reads)
+      case _ => ()
+    }
+    out
+  }
 
   /** `.lineageCut` chains where `.localCheckpoint()` used to. */
   implicit final class LineageCut(private val df: DataFrame) extends AnyVal {

@@ -22,8 +22,11 @@ object Tables {
     * is NOT persisted: every execution still scans the parquet fresh. It
     * is a PlanCache memo like every other reuse-until-the-data-changes
     * value, so a corpus rewritten in place re-resolves after
-    * PlanCache.invalidate(dir). At cluster scale this is what a catalog
-    * table does — resolve once, scan per query. */
+    * PlanCache.invalidate(dir), and one changed table after
+    * PlanCache.invalidate(dir, s"$dir/$name.parquet"). Every memo whose
+    * build loads a table here counts that table in its read set. At
+    * cluster scale this is what a catalog table does — resolve once,
+    * scan per query. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       // virtual views the DSL can query like stored tables — the six

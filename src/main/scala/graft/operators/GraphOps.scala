@@ -33,9 +33,11 @@ object GraphOps {
     * would re-scan and re-distinct lineitem (cortex materializes its edge
     * tables for the same reason, internal/storage/schema.go). When a
     * watch loop is live for this (session, dir), the relation reads the
-    * stream-maintained edge table instead (see streaming.WatchLoop);
-    * PlanCache.invalidate(dir) per micro-batch is what makes the memo
-    * follow the stream.
+    * stream-maintained edge table instead (see streaming.WatchLoop); the
+    * loop's per-batch sweep of that table, PlanCache.invalidate(dir,
+    * table), is what makes this memo and every memo built on it follow
+    * the stream. [[usesEdges]] reads orders and lineitem, not this
+    * relation, so its memos survive an edge batch.
     */
   private def edges(spark: SparkSession, dir: String): DataFrame =
     graft.PlanCache.getOrBuild(spark, dir, "edges") {
@@ -77,7 +79,7 @@ object GraphOps {
     *
     *  - Frontier lifetime: each layer persists through PlanCache as
     *    `$tag:frontier$h` (not a bare .persist()), so hop h+1 never
-    *    re-derives hops 1..h and invalidate(dir) releases the layers with
+    *    re-derives hops 1..h and a sweep releases the layers with
     *    the memoized output instead of pinning executor storage for the
     *    session lifetime. A fixed tag builds its layers at most once per
     *    (session, dir). `release` is for per-query tags (one per

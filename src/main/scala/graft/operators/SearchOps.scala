@@ -380,7 +380,7 @@ object SearchOps {
     * structurally single: one label-count aggregate per corpus snapshot,
     * every broadcast build a scan of the label-bounded cached relation.
     * Same lifecycle as every PlanCache memo (session-scoped, swept by
-    * PlanCache.invalidate(dir)). */
+    * PlanCache.invalidate(dir) or by a sweep of the table it reads). */
   private[graft] def cellCensus(spark: SparkSession, dir: String): DataFrame =
     graft.PlanCache.getOrBuild(spark, dir, "knn:cellSizes") {
       spark.table(graft.sources.IndexStore.index(spark, dir).embByLabel)

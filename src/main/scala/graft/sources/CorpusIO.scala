@@ -61,9 +61,10 @@ object CorpusIO {
 
   /** One JSONL copy per (session, dir), a PlanCache memo released by
     * deleting the copy: concurrent sessions get their own copies (no
-    * overwrite under a reader), and PlanCache.invalidate(dir) deletes
-    * every session's copy, so a rewritten documents table is
-    * re-serialized instead of read stale. */
+    * overwrite under a reader), and PlanCache.invalidate(dir), or a sweep
+    * of the documents table the copy's build loads, deletes every
+    * session's copy, so a rewritten documents table is re-serialized
+    * instead of read stale. */
   private def jsonlCopy(spark: SparkSession, dir: String): String =
     graft.PlanCache.memo(spark, dir, "jsonlCopy") {
       val t = java.nio.file.Files.createTempDirectory(jsonlRoot, "copy_")

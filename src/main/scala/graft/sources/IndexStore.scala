@@ -272,10 +272,11 @@ object IndexStore {
 
   /** "The data under `dir` changed": drop every registry table built over
     * `dir` (all sessions' entries and the physical tables, the search
-    * index included), then [[graft.PlanCache.invalidate]] the dir's
-    * memos. PlanCache.invalidate(dir) alone — the watch loop's per-batch
-    * call — releases memos only; without this call the tables would keep
-    * answering from the pre-change snapshot.
+    * index included), then sweep every memo of the dir
+    * (PlanCache.invalidate(dir)). A PlanCache sweep alone — dir-wide, or
+    * the watch loop's per-batch sweep of its edge table — releases memos
+    * only; without this call the tables would keep answering from the
+    * pre-change snapshot.
     *
     * Each table's drop runs under its build monitor, so it never lands
     * mid-write under an in-flight build, nor between a build's write and

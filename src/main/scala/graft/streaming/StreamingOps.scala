@@ -251,8 +251,8 @@ object StreamingOps {
     * edges), the same footprint the batch edge relation occupies — and
     * the append output carries only never-seen edges, which is exactly
     * the signal a deployment's foreachBatch uses to upsert the
-    * IndexStore edge table and PlanCache.invalidate(dir) the memoized BFS
-    * relations. Edge DELETION is a retraction and routes through the
+    * IndexStore edge table and sweep the memos over that table
+    * (PlanCache.invalidate(dir, table)), BFS relations included. Edge DELETION is a retraction and routes through the
     * batch change-detect path (reference analogue:
     * BuildIncremental_RemovesDanglingEdges re-derives from files), not
     * this append stream.

@@ -9,10 +9,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Reload: storage updated, in-memory index swapped) wired onto Spark
   * primitives: [[StreamingOps.streamingEdgeUpserts]] emits only
   * never-seen edges, and each non-empty micro-batch (1) appends them to
-  * the session's edge table and (2) dir-scope-invalidates PlanCache so
-  * every memoized BFS relation rebuilds against the updated graph on its
-  * next use. An unchanged batch (every edge already in state) writes
-  * nothing and invalidates nothing — the no-op reload.
+  * the session's edge table and (2) sweeps PlanCache for that TABLE
+  * (PlanCache.invalidate(dir, table)): the memos whose read set covers
+  * the edge table — the edge relation, the supplier↔part graph reads and
+  * their BFS chains — rebuild against the updated graph on their next
+  * use, and the rest of the dir's memos (vectors, the customer→supplier
+  * `uses` graph, scans of the corpus tables) stay. An unchanged batch
+  * (every edge already in state) writes nothing and invalidates nothing —
+  * the no-op reload. Starting and stopping a watch re-routes the edge
+  * relation, so both sweep the whole dir.
   *
   * The override registry is IN-MEMORY (session-keyed), deliberately not
   * catalog-existence-based: a leftover physical table from a previous
@@ -22,8 +27,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale posture: the append writes exactly the new edges (work ∝ churn,
   * the watch-mode property), the read path collapses the append log with
-  * one distinct(), and invalidation is scoped to the changed dir so other
-  * corpora's persisted relations stay live.
+  * one distinct(), and invalidation is scoped to the changed table of the
+  * changed dir, so every memo that did not read it stays live.
   *
   * Failure posture: consuming a micro-batch COMMITS its edges into the
   * stream's dropDuplicates state, so a batch whose index build throws
@@ -42,14 +47,25 @@ object WatchLoop {
 
   private val live = new ConcurrentHashMap[(SparkSession, String), String]()
 
+  /** Entries of stopped sessions leave [[live]] and [[ledgers]] on every
+    * access, as PlanCache's do, so neither pins a stopped session. */
+  private def evictStopped(): Unit = {
+    live.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    ledgers.keySet.removeIf(k => k._1.sparkContext.isStopped)
+  }
+
   /** One recorded reload (= micro-batch) of a running watch loop — the
     * reference's RecordReload arguments (internal/mcp/metrics.go:52:
     * duration, error, chunk count) as a ledger row. `n_new_edges` is
     * this index's chunk-count analogue (edges appended by the batch, 0
     * for a no-op or failed reload); `total_edges` is the edge table's
-    * size after the batch (the CurrentChunkCount analogue). */
+    * size after the batch (the CurrentChunkCount analogue);
+    * `n_memos_dropped` is the number of PlanCache entries the batch's
+    * sweep released (0 when nothing was appended) and `n_memos_kept` the
+    * dir's entries left standing. */
   final case class ReloadRecord(batch_id: Long, duration_ms: Long,
-      n_new_edges: Long, total_edges: Long, error: Option[String])
+      n_new_edges: Long, total_edges: Long, error: Option[String],
+      n_memos_dropped: Long = 0L, n_memos_kept: Long = 0L)
 
   /** The reference's MetricsSnapshot (internal/mcp/metrics.go:30),
     * folded from the ledger: counters never reset while the loop runs. */
@@ -63,8 +79,10 @@ object WatchLoop {
   /** The per-batch reload ledger for a (session, dir) watch loop, as a
     * relation — every micro-batch appends one row, no-op reloads
     * included (the reference records every reload, successful or not).
-    * Empty when no loop has run. Driver-side state, never a Spark job:
-    * the ledger is observability FOR the stream, not part of it. */
+    * Empty when no loop has run; still readable after [[stop]], until the
+    * session stops or a new watch starts. Driver-side state, never a
+    * Spark job: the ledger is observability FOR the stream, not part of
+    * it. */
   def reloadLedger(spark: SparkSession, dir: String): DataFrame = {
     val s = spark
     import s.implicits._
@@ -74,9 +92,11 @@ object WatchLoop {
   /** The ledger's rows, copied under the vector's own lock: the stream
     * thread appends while callers read, and iterating the live vector
     * fails fast with ConcurrentModificationException. */
-  private def records(spark: SparkSession, dir: String): Seq[ReloadRecord] =
+  private def records(spark: SparkSession, dir: String): Seq[ReloadRecord] = {
+    evictStopped()
     Option(ledgers.get((spark, dir)))
       .fold(Seq.empty[ReloadRecord])(_.toArray(new Array[ReloadRecord](0)).toSeq)
+  }
 
   /** Snapshot the ledger into the reference's metrics shape. */
   def metrics(spark: SparkSession, dir: String): ReloadSnapshot = {
@@ -96,14 +116,17 @@ object WatchLoop {
     * re-notified edge that raced past the stream's state dedup is a
     * harmless duplicate row, exactly like the reference's idempotent
     * upsert). */
-  private[graft] def edgeOverride(spark: SparkSession, dir: String): Option[DataFrame] =
+  private[graft] def edgeOverride(spark: SparkSession, dir: String): Option[DataFrame] = {
+    evictStopped()
     Option(live.get((spark, dir))).map(t => spark.table(t).distinct())
+  }
 
   /** Start watching: seed the edge table from the current batch relation,
     * register the override, and attach the stream. Returns the running
     * query; the caller owns its lifecycle. */
   def start(spark: SparkSession, dir: String,
       edgeStream: DataFrame): StreamingQuery = {
+    evictStopped()
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val tbl = s"graft_watch_edges$tag"
     // failed-batch stash: a micro-batch whose index build throws has
@@ -138,6 +161,7 @@ object WatchLoop {
         // no-op reload holds for replays too.
         val t0 = System.nanoTime()
         var appended = 0L
+        var dropped = 0L
         var err: Option[String] = None
         val sess = batch.sparkSession
         try {
@@ -163,13 +187,14 @@ object WatchLoop {
               // memos it rebuilds after the invalidation below would miss
               // these edges (and, matched by path, be served to any session
               // reading the table). Own try, like the stash drop below:
-              // the append landed.
+              // the append landed. Only the memos that read the edge table
+              // are swept.
               try spark.catalog.refreshTable(tbl)
               catch { case scala.util.control.NonFatal(e) =>
                 Console.err.println(
                   s"watch-loop: refreshing $tbl in the caller's session failed: $e")
               }
-              graft.PlanCache.invalidate(dir)
+              dropped = graft.PlanCache.invalidate(dir, tbl).toLong
             }
           } finally { fresh.unpersist(); () }
           // the stash landed (or deduped away) with this batch — clear it.
@@ -223,15 +248,18 @@ object WatchLoop {
             }
         }
         ledger.add(ReloadRecord(batchId, (System.nanoTime() - t0) / 1000000L,
-          if (err.isEmpty) appended else 0L, totalEdges.get(), err))
+          if (err.isEmpty) appended else 0L, totalEdges.get(), err,
+          dropped, graft.PlanCache.size(dir).toLong))
         ()
       }
       .start()
   }
 
   /** Deregister the override (the caller stops the query) and drop the
-    * dir's memoized relations so queries fall back to the batch path. */
+    * dir's memoized relations so queries fall back to the batch path.
+    * The loop's ledger stays readable. */
   def stop(spark: SparkSession, dir: String): Unit = {
+    evictStopped()
     live.remove((spark, dir))
     graft.PlanCache.invalidate(dir)
   }

@@ -96,7 +96,7 @@ class BucketConfSpec extends AnyFunSuite with SparkFixture {
     // first-seen byte count for the JVM's lifetime: the data-changed
     // invalidation sweeps the sizing memo, so the next resolve sees the
     // grown corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-grow").toString
+    val dir = TempDirs("graft-grow").toString
     val docs = Tables.documents(spark, SfDir)
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val small = {
@@ -128,7 +128,7 @@ class BucketConfSpec extends AnyFunSuite with SparkFixture {
     // the routing scalar dedup_incremental reads must be a property of
     // the corpus (one count, then memo hits — plan construction stays
     // lazy), re-derived only when the data-changed hook fires
-    val dir = java.nio.file.Files.createTempDirectory("graft-churn").toString
+    val dir = TempDirs("graft-churn").toString
     val docs = Tables.documents(spark, SfDir)
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val expect = docs.filter(col("doc_id") % 10 === 7).count()
@@ -147,7 +147,7 @@ class BucketConfSpec extends AnyFunSuite with SparkFixture {
   test("dir-shaped corpus bytes count nested (partitioned) leaves") {
     // a partitionBy layout nests data files one level deeper — sizing
     // must count the leaves, not the ~0 bytes of the top listing level
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = TempDirs("graft-part").toString
     Tables.documents(spark, SfDir).write.mode("overwrite")
       .partitionBy("lang").parquet(s"$dir/documents.parquet")
     // target 1 byte: any nonzero corpus overflows the floor to the max

@@ -17,7 +17,7 @@ class CheckpointSpec extends AnyFunSuite with SparkFixture {
     val depth = 3 // only this spec queries depth 3 — private memo keys
     val baseline = operators.GraphOps.kHop(spark, SfDir, depth).collect()
       .map(_.toSeq).toSet
-    val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toString
+    val ckDir = TempDirs("graft-ck").toString
     khopKeys(depth).foreach(PlanCache.drop(spark, SfDir, _))
     spark.conf.set(Checkpoints.DirConf, ckDir)
     try {

@@ -8,7 +8,7 @@ class CorpusIOSpec extends AnyFunSuite with SparkFixture {
 
   test("jsonl round-trip preserves every row and column exactly") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val out = TempDirs("graft-jsonl").toString
     // the corpus text is single-line ascii, so plant one adversarial doc
     // exercising the JSON escape paths: newlines, quotes, backslashes,
     // tabs, and non-ascii
@@ -44,7 +44,7 @@ class CorpusIOSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("the explicit schema skips inference and FAILFAST rejects corrupt lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-bad")
+    val dir = TempDirs("graft-jsonl-bad")
     java.nio.file.Files.write(dir.resolve("part-0.json"),
       java.util.Arrays.asList(
         """{"doc_id": 1, "text": "ok", "lang": "en", "source": "s", "n_chars": 2}""",

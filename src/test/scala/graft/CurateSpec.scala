@@ -173,7 +173,7 @@ class CurateSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("writeShards lays out sorted per-shard parquet matching the query op") {
-    val out = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val out = TempDirs("graft-shards").toString
     CurateOps.writeShards(spark, SfDir, out)
     val positions = CurateOps.curateShuffleShards(spark, SfDir).collect()
       .map(r => (r.getInt(1), r.getLong(0))).groupBy(_._1)

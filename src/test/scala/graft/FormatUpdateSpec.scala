@@ -17,7 +17,7 @@ class FormatUpdateSpec extends AnyFunSuite with SparkFixture {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("fmt").toString
+    val dir = TempDirs("fmt").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = PatternOps.symbolsFormat(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
@@ -49,7 +49,7 @@ class FormatUpdateSpec extends AnyFunSuite with SparkFixture {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("ctx").toString
+    val dir = TempDirs("ctx").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = GraphOps.graphContext(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(4))).toSet
@@ -99,7 +99,7 @@ class FormatUpdateSpec extends AnyFunSuite with SparkFixture {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("gud").toString
+    val dir = TempDirs("gud").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = GraphOps.graphUpdateIncremental(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(4)))

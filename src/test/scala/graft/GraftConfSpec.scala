@@ -73,7 +73,7 @@ class GraftConfSpec extends AnyFunSuite {
   }
 
   test("dirBytes sums only *.parquet files, recursively") {
-    val d = java.nio.file.Files.createTempDirectory("graft-split")
+    val d = TempDirs("graft-split")
     val sub = java.nio.file.Files.createDirectory(d.resolve("sub"))
     java.nio.file.Files.write(d.resolve("a.parquet"), new Array[Byte](1000))
     java.nio.file.Files.write(sub.resolve("b.parquet"), new Array[Byte](500))

@@ -20,7 +20,7 @@ object SparkFixture {
   def session(dir: String): SparkSession = synchronized {
     if (shared == null)
       shared = GraftSession(dir, "spark.sql.warehouse.dir" ->
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+        TempDirs("graft-wh").toString)
     shared
   }
 }
@@ -2053,7 +2053,7 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("invalidateDerived rebuilds the search index over a rewritten corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-reindex").toString
+    val dir = TempDirs("graft-reindex").toString
     val emb = Tables.embeddings(spark, SfDir)
     Tables.documents(spark, SfDir).write.parquet(s"$dir/documents.parquet")
     emb.write.parquet(s"$dir/embeddings.parquet")
@@ -2069,7 +2069,7 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
 
   test("concurrent derivedBucketed calls for one key write one table once") {
     // no corpus files: the bucket count sizes to the floor from 0 bytes
-    val dir = java.nio.file.Files.createTempDirectory("graft-race").toString
+    val dir = TempDirs("graft-race").toString
     val builds = new java.util.concurrent.atomic.AtomicInteger()
     val start = new java.util.concurrent.CountDownLatch(1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -2889,7 +2889,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
     // the real watch-mode ingestion path (cortex's file watcher): a
     // parquet directory that gains files over time, read as a stream —
     // each new file is one micro-batch, no reprocessing of old files
-    val dirIn = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val dirIn = TempDirs("graft-ingest").toString
     val docs = Tables.documents(spark, SfDir).select("doc_id", "text", "lang")
     docs.filter(col("doc_id") % 2 === 0).write.mode("append").parquet(dirIn)
     val q = StreamingOps.streamingCurateGate(

@@ -10,7 +10,7 @@ class IfaceMatchSpec extends AnyFunSuite with SparkFixture {
 
   private def corpus(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ifm").toString
+    val dir = TempDirs("ifm").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))

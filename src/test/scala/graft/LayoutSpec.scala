@@ -72,7 +72,7 @@ class LayoutSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("z-ordered sink writes files with tight boxes in both dims") {
-    val out = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val out = TempDirs("graft-zorder").toString
     LayoutOps.writeZOrdered(spark, SfDir, out, nFiles = 16)
     val perFile = spark.read.parquet(out)
       .groupBy(input_file_name().as("f"))

@@ -79,7 +79,7 @@ class LshGeometrySpec extends AnyFunSuite with SparkFixture {
   /** A corpus dir whose hottest cell holds `hot` vectors: the sf0.001
     * embeddings replicated with shifted ids, all forced into label 0. */
   private def hotCellCorpus(hot: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hotcell").toString
+    val dir = TempDirs("graft-hotcell").toString
     val base = Tables.embeddings(spark, SfDir)
     val n = base.count()
     val copies = (hot + n - 1) / n
@@ -147,7 +147,7 @@ class LshGeometrySpec extends AnyFunSuite with SparkFixture {
     // integer-shift replay, so they are pinned here
     val base = Tables.embeddings(spark, SfDir).withColumn("label", lit(0))
     def corpusOf(n: Int): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft-edge").toString
+      val dir = TempDirs("graft-edge").toString
       (0L until 5L).map(c => base
           .withColumn("vec_id", col("vec_id") + lit(c * 1000000L)))
         .reduce(_ unionAll _)
@@ -185,7 +185,7 @@ class LshGeometrySpec extends AnyFunSuite with SparkFixture {
     // max(n) census to 0 so the min(b) filter keeps every width and
     // picks the same floor (an uncoalesced NULL census would filter
     // every candidate and fall back to the 16-bit CEILING).
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val dir = TempDirs("graft-empty").toString
     Tables.embeddings(spark, SfDir).limit(0)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     assert(DedupOps.autoBits(spark, dir) == DedupOps.EmbBits)
@@ -196,7 +196,7 @@ class LshGeometrySpec extends AnyFunSuite with SparkFixture {
 
   test("auto width re-derives after a data-changed invalidation") {
     import operators.DedupOps
-    val dir = java.nio.file.Files.createTempDirectory("graft-grow-lsh").toString
+    val dir = TempDirs("graft-grow-lsh").toString
     val base = Tables.embeddings(spark, SfDir)
     base.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     assert(DedupOps.autoBits(spark, dir) == 4)

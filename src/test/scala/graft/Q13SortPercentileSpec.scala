@@ -45,7 +45,7 @@ class Q13SortPercentileSpec extends AnyFunSuite with SparkFixture {
     val df = rows.result().toDF("o_orderpriority", "o_totalprice")
     // route the sort-based form through a temp parquet dir so it reads
     // the same relation shape the operator expects
-    val dir = java.nio.file.Files.createTempDirectory("q13spec").toString
+    val dir = TempDirs("q13spec").toString
     df.coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/orders.parquet")
     val sorted = byKey(operators.Relational.q13Percentiles(spark, dir))

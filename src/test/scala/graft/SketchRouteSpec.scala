@@ -161,7 +161,7 @@ class SketchRouteSpec extends AnyFunSuite with SparkFixture {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
-    val dir = java.nio.file.Files.createTempDirectory("gopher").toString
+    val dir = TempDirs("gopher").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = CurateOps.curateGopherRules(spark, dir).collect()
       .map(r => r.getLong(0) -> r).toMap

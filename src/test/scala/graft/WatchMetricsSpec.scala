@@ -46,6 +46,37 @@ class WatchMetricsSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("the ledger counts the memos each reload dropped and kept") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, Long)]
+    val q = WatchLoop.start(spark, SfDir, mem.toDF().toDF("src", "dst"))
+    try {
+      // one memo over the edge table, one over orders and lineitem only
+      operators.GraphOps.graphKhop(spark, SfDir).count()
+      operators.GraphOps.graphDependents(spark, SfDir).count()
+      def last() = WatchLoop.reloadLedger(spark, SfDir).collect().last
+      mem.addData((0L, 777777L))
+      q.processAllAvailable()
+      val grown = last()
+      assert(grown.getAs[Long]("n_new_edges") == 1L)
+      assert(grown.getAs[Long]("n_memos_dropped") > 0L,
+        "a batch with new edges drops the memos over the edge table")
+      assert(grown.getAs[Long]("n_memos_kept") > 0L,
+        "and keeps the memos that do not read it")
+      mem.addData((0L, 777777L))
+      q.processAllAvailable()
+      val noop = last()
+      assert(noop.getAs[Long]("n_new_edges") == 0L)
+      assert(noop.getAs[Long]("n_memos_dropped") == 0L,
+        "a no-op reload drops nothing")
+    } finally {
+      q.stop()
+      WatchLoop.stop(spark, SfDir)
+    }
+  }
+
   test("a failing micro-batch is ledgered and the loop keeps serving") {
     // the reference's RecordReload(err) posture (metrics.go:62): a reload
     // whose index build throws bumps failedReloads and the loop keeps
