@@ -13,11 +13,15 @@
 #   heavies:<sf>  graft.Bench over the pair-generating heavies, tagged
 #                 <sf>-heavies (docs/bench_full_<sf>-heavies.json)
 #   plans:<tag>   final plans at sf0.01 into plans/<tag>/<query>_after.txt
-#   compare:<rev>:<sf>
+#   compare:<rev>:<sf>[:<q1,q2,...>]
 #                 same outputs A/B: graft.Verify at git revision <rev>
 #                 (exported with git archive into $TMPDIR, default /tmp)
 #                 and at the working tree, then check_oracle.py --compare
-#                 on the two dumps; exits non-zero if any query differs
+#                 on the two dumps; exits non-zero if any query differs.
+#                 The optional comma-separated names go to Verify's name
+#                 filter (a query runs if its name contains one of them),
+#                 so e.g. compare:HEAD~1:sf0.1:dedup_semantic,curate_d4
+#                 A/Bs only those queries
 #   clean         drop the derived-table warehouse so indexes rebuild
 # <sf> is sf0.001, sf0.01 or sf0.1 (under $TESTDATA) or a ScaleUp corpus.
 #
@@ -85,14 +89,16 @@ for step in "$@"; do
       ;;
     plans:*) bash scripts/capture_plans.sh "$arg" after "$(corpus_dir sf0.01)" ;;
     compare:*)
-      rev=${arg%%:*}; sf=${arg#*:}; dir=$(corpus_dir "$sf")
+      rev=${arg%%:*}; sf=${arg#*:}; names=""
+      case $sf in *:*) names=${sf#*:}; names=${names//,/ }; sf=${sf%%:*} ;; esac
+      dir=$(corpus_dir "$sf")
       tmp=${TMPDIR:-/tmp}; short=$(git rev-parse --short "$rev")
       tree=$tmp/graft-compare-$short
       base=$tmp/verify_${sf}_$short; work=$tmp/verify_${sf}_work
       rm -rf "$tree" "$base" "$work"; mkdir -p "$tree"
       git archive "$rev" | tar -x -C "$tree"
-      (cd "$tree" && run graft.Verify "$dir" "$base") 2>&1 | grep "\[verify\]" || true
-      run graft.Verify "$dir" "$work" 2>&1 | grep "\[verify\]" || true
+      (cd "$tree" && run graft.Verify "$dir" "$base" $names) 2>&1 | grep "\[verify\]" || true
+      run graft.Verify "$dir" "$work" $names 2>&1 | grep "\[verify\]" || true
       python3 scripts/check_oracle.py --compare "$base" "$work"
       ;;
     clean) rm -rf spark-warehouse ;;

@@ -13,6 +13,19 @@ object GraftConf {
 
   private[graft] val MiB = 1L << 20
 
+  /** One integer knob from a conf lookup (a session's `conf.getOption`,
+    * or the oracle's view of the active session): the set value, else
+    * `default`, required to lie in [lo, hi]. The operator knobs resolve
+    * through it, each in one resolver that its oracle replay calls too,
+    * so the engine and the oracle share the knob's default and range. */
+  private[graft] def resolve(conf: String => Option[String], key: String,
+      default: Long, lo: Long, hi: Long = Long.MaxValue): Long = {
+    val v = conf(key).map(_.toLong).getOrElse(default)
+    require(v >= lo && v <= hi,
+      if (hi == Long.MaxValue) s"$key must be >= $lo, got $v" else s"$key out of range: $v")
+    v
+  }
+
   /** Scan split sizing (`spark.sql.files.maxPartitionBytes`) for the
     * driver mains, derived from corpus bytes instead of pinned.
     *

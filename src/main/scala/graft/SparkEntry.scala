@@ -188,8 +188,7 @@ object SparkEntry {
     * with half the vectors in one cell, surfaced exactly 7 of them). */
   private def duckEmbBandCtes(materialize: Boolean = true): String = {
     val mat = if (materialize) " MATERIALIZED" else ""
-    import operators.DedupOps.{EmbSeed, EmbBands, EmbBits, EmbDim,
-      LshTargetBucketConf, LshTargetBucketDefault, LshBitsAutoMax}
+    import operators.DedupOps.{EmbSeed, EmbBits, EmbDim, LshBitsAutoMax}
     // geo replays DedupOps.autoBits: the signature width is the smallest
     // bits in [EmbBits, LshBitsAutoMax] whose expected per-band bucket in
     // the HOTTEST cell (max cell size / 2^bits) fits the target — integer
@@ -211,17 +210,12 @@ object SparkEntry {
     // autoBits staying on the floor (without it the max(n) subquery is
     // NULL, the WHERE filters every width, and the fallback lands on the
     // 16-bit CEILING instead).
-    val sess = org.apache.spark.sql.SparkSession.getActiveSession
-    val lshTarget = sess.flatMap(_.conf.getOption(LshTargetBucketConf))
-      .map(_.toLong).getOrElse(LshTargetBucketDefault)
     // pinned geometry resolves the same way (DedupOps.lshGeometry reads
     // both confs before falling back to the census): a session pinning
     // bands/bits must hand the oracle the pinned values, or the replay
     // derives the auto geometry against pinned signatures
-    val bands = sess.flatMap(_.conf.getOption(operators.DedupOps.LshBandsConf))
-      .map(_.toInt).getOrElse(EmbBands)
-    val pinnedBits = sess
-      .flatMap(_.conf.getOption(operators.DedupOps.LshBitsConf)).map(_.toInt)
+    val bands = operators.DedupOps.lshBands(activeConf)
+    val pinnedBits = operators.DedupOps.lshBits(activeConf)
     val maxPlanes = bands * math.max(LshBitsAutoMax, pinnedBits.getOrElse(0))
     val geoCte = pinnedBits match {
       case Some(b) => s"geo AS (SELECT $b AS bits)"
@@ -230,7 +224,7 @@ object SparkEntry {
            |    FROM range($EmbBits, ${LshBitsAutoMax + 1}) t(b)
            |    WHERE coalesce((SELECT max(n)
            |        FROM (SELECT count(*) AS n FROM e GROUP BY label)), 0)
-           |      <= $lshTarget * (1::BIGINT << b)),
+           |      <= ${operators.DedupOps.lshTargetBucket(activeConf)} * (1::BIGINT << b)),
            |  $LshBitsAutoMax) AS bits)""".stripMargin
     }
     // Materialization is a TRADE, controlled per consumer: DuckDB 1.0
@@ -300,18 +294,14 @@ object SparkEntry {
     // '||' concat that lands at start-of-line)
   }
 
-  /** The exact-cell cap the dedup_semantic oracle's `routed` flag
-    * replays, resolved from the ACTIVE session at oracle-generation time
-    * (Verify generates the SQL in the session that runs the queries) so
-    * a session that tunes spark.graft.knnPairBudget keeps the oracle in
-    * lockstep with the engine's derived cap; sessionless contexts (unit
-    * tests stringifying the map) fall back to the default-budget cap. */
-  private def resolvedExactCellCap: Long =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(operators.SearchOps.exactCellCap)
-      .getOrElse(operators.SearchOps.isqrt(
-        operators.SearchOps.KnnPairBudgetDefault *
-          operators.SearchOps.KnnMaxSaltSlices))
+  /** A conf key as the ACTIVE session holds it: the oracle SQL is
+    * generated in the session that runs the queries (Verify), so every
+    * routing and geometry knob is resolved through the operator's own
+    * resolver over this lookup and replays the value the engine read;
+    * sessionless contexts (unit tests stringifying the map) see every
+    * key unset, i.e. the resolvers' defaults. */
+  private def activeConf(key: String): Option[String] =
+    org.apache.spark.sql.SparkSession.getActiveSession.flatMap(_.conf.getOption(key))
 
   /** Exact top-3-per-vector ranking WITHOUT a global window sort: the
     * row_number-over-everything formulation sorts the ENTIRE scored-pair
@@ -1036,7 +1026,7 @@ object SparkEntry {
          |cn AS (SELECT cluster, count(*) AS cell_n FROM a2 GROUP BY 1)
          |SELECT a2.vec_id, a2.cluster,
          |  (a2.vec_id NOT IN (SELECT b_id FROM pr)) AS keep,
-         |  (cn.cell_n > $resolvedExactCellCap) AS routed
+         |  (cn.cell_n > ${operators.SearchOps.exactCellCap(activeConf _)}) AS routed
          |FROM a2 JOIN cn USING (cluster)""".stripMargin,
     // lockstep with CurateOps.curateD4 (D4DropFrac, SemTau, the shared
     // k-means CTE chain and the dedup_semantic drop CTE)
@@ -1136,9 +1126,7 @@ object SparkEntry {
       // resolved from the ACTIVE session like the geo CTE's width target:
       // a session tuning spark.graft.knnAutoCellCap must hand the oracle
       // the same routing threshold the engine reads at runtime
-      val autoCap = org.apache.spark.sql.SparkSession.getActiveSession
-        .flatMap(_.conf.getOption(operators.SearchOps.AutoCapConf))
-        .map(_.toLong).getOrElse(operators.SearchOps.AutoCapDefault)
+      val autoCap = operators.SearchOps.autoCellCap(activeConf)
       // The two branches are ranked SEPARATELY and ASYMMETRICALLY, and
       // every choice here is load-bearing at sf10 (each alternative was
       // run to its ~60 GB spill before landing on this shape):

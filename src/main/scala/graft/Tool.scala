@@ -22,8 +22,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     task count and shuffle bytes;
   *   - `bucketed count...`: the band-join families of [[BucketFamilies]]
   *     timed under each pinned index bucket count;
-  *   - `knn`: the batch-KNN exact pair stage, join only and scored, vs
-  *     the full operator (pairs + top-3 tail).
+  *   - `knn`: the batch-KNN exact pair builder over the label cells,
+  *     join only and scored, vs the full operator (scored pairs + top-3
+  *     tail).
   */
 object Tool {
 
@@ -157,16 +158,19 @@ object Tool {
     }
 
   /** Batch-KNN stage attribution over the census-adaptive exact pair
-    * path: join only, scored pairs, and the full operator (pairs + top-3
-    * tail), so block-join compute, scoring and the top-k aggregate are
-    * costed separately on the same index tables. */
+    * builder on the index's label cells: join only, scored pairs, and
+    * the full operator (scored pairs + top-3 tail), so block-join
+    * compute, scoring and the top-k aggregate are costed separately on
+    * the same index tables. */
   private def knn(spark: SparkSession, dir: String): Unit = {
+    import operators.SearchOps
     def best(df: DataFrame): Double = warmThenTimed(df)._2.min
-    val pairs = operators.SearchOps.exactPairs(spark, dir, None, None)
-    // same join, scoring pruned away — isolates pair iteration cost
+    val pairs = SearchOps.exactPairs(spark, SearchOps.labelCells(spark, dir), None, None)
+    // same join, riders pruned away — isolates pair iteration cost
     val joinOnly = pairs.select(col("label"), col("a_id"), col("b_id"))
-    val full = operators.SearchOps.top3(spark, pairs)
-    val tj = best(joinOnly); val tp = best(pairs); val tf = best(full)
+    val scored = SearchOps.knnScored(pairs)
+    val full = SearchOps.top3(spark, scored)
+    val tj = best(joinOnly); val tp = best(scored); val tf = best(full)
     println(f"KNN join=$tj%6.2fs pairs=$tp%6.2fs full=$tf%6.2fs " +
       f"score_delta=${tp - tj}%6.2fs agg_delta=${tf - tp}%6.2fs")
   }

@@ -269,9 +269,8 @@ object DedupOps {
     val newBands = minhashBandsOf(ng.filter(col("doc_id") % IncrMod === IncrRes))
     val corpus = minhashBands(spark, dir)
       .filter(col("doc_id") % IncrMod =!= IncrRes)
-    val cap = spark.conf.getOption(IncrBroadcastDocsConf).map(_.toLong)
-      .getOrElse(IncrBroadcastDocsDefault)
-    require(cap >= 0, s"$IncrBroadcastDocsConf must be >= 0, got $cap")
+    val cap = graft.GraftConf.resolve(spark.conf.getOption _, IncrBroadcastDocsConf,
+      IncrBroadcastDocsDefault, 0)
     // churn census: one pushed-filter count over the doc_id column — the
     // routing scalar, same posture as vec_knn_join_auto's cell census.
     // A PlanCache memo (IndexStore.churnDocs, next to maxCellSize): plan
@@ -550,14 +549,25 @@ object DedupOps {
   private[graft] val LshTargetBucketDefault = 128L
   private[graft] val LshBitsAutoMax = 16
 
+  /** The one resolver of [[LshTargetBucketConf]]: its default and range. */
+  private[graft] def lshTargetBucket(conf: String => Option[String]): Long =
+    graft.GraftConf.resolve(conf, LshTargetBucketConf, LshTargetBucketDefault, 1)
+
+  /** The one resolver of [[LshBandsConf]]: its default and range. */
+  private[graft] def lshBands(conf: String => Option[String]): Int =
+    graft.GraftConf.resolve(conf, LshBandsConf, EmbBands, 1, 512).toInt
+
+  /** The one resolver of [[LshBitsConf]]: the pinned width, if any
+    * (unset = census-derived, see [[autoBits]]), and its range. */
+  private[graft] def lshBits(conf: String => Option[String]): Option[Int] =
+    conf(LshBitsConf).map(_ => graft.GraftConf.resolve(conf, LshBitsConf, 0, 1, 32).toInt)
+
   /** The census-derived signature width when [[LshBitsConf]] is unset:
     * smallest bits in [EmbBits, 16] with maxCell <= target · 2^bits.
     * Integer arithmetic only — the DuckDB replay must agree on exact
     * power-of-two boundaries, so no float log2 on either side. */
   private[graft] def autoBits(spark: SparkSession, dir: String): Int = {
-    val target = spark.conf.getOption(LshTargetBucketConf).map(_.toLong)
-      .getOrElse(LshTargetBucketDefault)
-    require(target >= 1, s"$LshTargetBucketConf must be >= 1, got $target")
+    val target = lshTargetBucket(spark.conf.getOption _)
     val maxCell = graft.sources.IndexStore.maxCellSize(spark, dir)
     var b = EmbBits
     while (b < LshBitsAutoMax && maxCell > (target << b)) b += 1
@@ -565,12 +575,8 @@ object DedupOps {
   }
 
   private[graft] def lshGeometry(spark: SparkSession, dir: String): (Int, Int) = {
-    val bands = spark.conf.getOption(LshBandsConf).map(_.toInt).getOrElse(EmbBands)
-    val bits = spark.conf.getOption(LshBitsConf).map(_.toInt)
-      .getOrElse(autoBits(spark, dir))
-    require(bands >= 1 && bands <= 512, s"$LshBandsConf out of range: $bands")
-    require(bits >= 1 && bits <= 32, s"$LshBitsConf out of range: $bits")
-    (bands, bits)
+    val conf = spark.conf.getOption _
+    (lshBands(conf), lshBits(conf).getOrElse(autoBits(spark, dir)))
   }
 
   /** THE hyperplane band relation for a corpus dir — the single source of
@@ -632,8 +638,7 @@ object DedupOps {
         // bucket cols
         .select(col("vec_id"), col("label"), col("emb"), col("ss"),
           col("psigs").as("sigs"), col("pos").as("band"),
-          (col("label").cast("long") * lit(4294967296L) + col("col"))
-            .as("cell_sig"))
+          cellSig(col("label"), col("col")).as("cell_sig"))
     })
     // UNPACK at the scan boundary, once per band row: BinaryType column
     // accesses copy the byte[] per evaluation, so the collision joins'
@@ -657,6 +662,11 @@ object DedupOps {
       unpackLongs(col("sigs")).as("sigs"), col("band"), col("cell_sig"))
       .hint("merge")
   }
+
+  /** The band-join key of a signature inside its cell: label·2^32 +
+    * sig, injective over (label, sig < 2^bits ≤ 2^32). */
+  private def cellSig(label: Column, sig: Column): Column =
+    label.cast("long") * lit(4294967296L) + sig
 
   /** True when `band` is the FIRST index where the two signature arrays
     * agree — the dedup-free collision discipline: a pair sharing k bands
@@ -789,16 +799,18 @@ object DedupOps {
     * ~2 500 embeddings). Reuses the [[SearchOps.kmeansAssigned]] trained
     * model (PlanCache-memoized, so vec_kmeans and this op train once).
     *
-    * Scale shape: the self-join key is the cluster id — cardinality k,
-    * which SCALES WITH THE CORPUS (k ∝ n / target-cell-size), so the
-    * exchange fans out; a cell that outgrows [[SearchOps.exactCellCap]]
-    * (a detonating Σcell² term) is ROUTED through the same
-    * random-hyperplane band blocking [[dedupEmbedding]] uses — exact
-    * all-pairs inside cap-bounded cells, band-collision candidates (still
-    * keyed within the cell) inside oversize ones, both verified by the
-    * identical exact-cosine ≥ τ predicate. Verdicts stay exact wherever
-    * the cap holds; oversize cells degrade to high-recall candidate
-    * generation instead of detonating (recall pinned in the spec). */
+    * Scale shape: the clusters are the cells of the batch-KNN cell
+    * router ([[SearchOps.routedPairs]], shared with vec_knn_join_auto):
+    * cells within [[SearchOps.exactCellCap]] get the exact pair builder
+    * (census-salted past the pair budget like every exact cell join),
+    * and a cell that outgrows it (a detonating Σcell² term) is routed
+    * through random-hyperplane band candidates keyed within the cell
+    * (the [[dedupEmbedding]] geometry over the cell's own members), each
+    * pair emitted once by its first matching band. Both are verified by
+    * the identical exact-cosine ≥ τ predicate, so verdicts stay exact
+    * wherever the cap holds; oversize cells degrade to high-recall
+    * candidate generation instead of detonating (recall pinned in the
+    * spec). */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame =
     // persisted per (session, dir): curate_d4 consumes the verdicts on
     // top of its own pruning pass — without the memo it re-runs the
@@ -809,41 +821,26 @@ object DedupOps {
 
   private[graft] def dedupSemanticCapped(spark: SparkSession, dir: String,
       cellCap: Long): DataFrame = {
-    import graft.functions.VectorFunctions.bandSigs
+    import graft.functions.VectorFunctions.{bandSigs, sumSquares}
     val asg = SearchOps.kmeansAssigned(spark, dir)
-    val cellSizes = asg.groupBy(col("cluster")).agg(count(lit(1)).as("cell_n"))
-    val tagged = asg.join(broadcast(cellSizes), "cluster")
-    val small = tagged.filter(col("cell_n") <= cellCap)
-    val big = tagged.filter(col("cell_n") > cellCap)
-    // cap-bounded cells: exact all-pairs (work ∝ Σ cell² ≤ n·cap)
-    val exactPairs = small
-      .select(col("cluster"), col("vec_id").as("a_id"), col("v").as("a_v"))
-      .join(small.select(col("cluster").as("b_cluster"),
-          col("vec_id").as("b_id"), col("v").as("b_v")),
-        col("cluster") === col("b_cluster") && col("a_id") < col("b_id"))
-      .select(col("a_id"), col("a_v"), col("b_id"), col("b_v"))
-    // oversize cells: candidates only where a full hyperplane band agrees
-    // WITHIN the cell (cluster folds into the join key) — the
-    // dedupEmbedding blocking geometry applied to the cell's own members
+    val census = asg.groupBy(col("cluster")).agg(count(lit(1)).as("cell_n"))
+      .withColumnRenamed("cluster", "label")
+    val cells = SearchOps.Cells(
+      asg.select(col("cluster").as("label"), col("vec_id"), col("v").as("embedding")),
+      census, graft.sources.IndexStore.censusMax(census))
     val (lshBands, lshBits) = lshGeometry(spark, dir)
-    val bands = big.select(col("cluster"), col("vec_id"), col("v"),
-        posexplode(bandSigs(col("v"), EmbSeed, lshBands, lshBits, EmbDim)))
-      .select(col("cluster"), col("vec_id"), col("v"),
-        col("pos").as("band"), col("col").as("sig"))
-    val bandPairs = bands
-      .select(col("cluster"), col("band"), col("sig"),
-        col("vec_id").as("a_id"), col("v").as("a_v"))
-      .join(bands.select(col("cluster").as("b_cluster"),
-          col("band").as("b_band"), col("sig").as("b_sig"),
-          col("vec_id").as("b_id"), col("v").as("b_v")),
-        col("cluster") === col("b_cluster") && col("band") === col("b_band") &&
-          col("sig") === col("b_sig") && col("a_id") < col("b_id"))
-      .select(col("a_id"), col("a_v"), col("b_id"), col("b_v"))
-      // a pair can collide in several bands; dedup on the id pair keeps
-      // the verify-side cosine work per-candidate, not per-collision
-      .dropDuplicates("a_id", "b_id")
-    val drops = exactPairs.unionAll(bandPairs)
-      .filter(fastRound(cosineSim(col("a_v"), col("b_v")), 4) >= SemTau)
+    // oversize cells' band rows in SearchOps.bandPairs' shape, the cell
+    // folded into cell_sig; the cell filter runs before the explode
+    val drops = SearchOps.routedPairs(spark, cells, cellCap) { big =>
+      cells.rows.join(broadcast(big), "label")
+        .select(col("vec_id"), col("label"), col("embedding").as("emb"),
+          sumSquares(col("embedding")).as("ss"),
+          bandSigs(col("embedding"), EmbSeed, lshBands, lshBits, EmbDim).as("sigs"))
+        .select(col("vec_id"), col("label"), col("emb"), col("ss"), col("sigs"),
+          posexplode(col("sigs")))
+        .select(col("vec_id"), col("label"), col("emb"), col("ss"), col("sigs"),
+          col("pos").as("band"), cellSig(col("label"), col("col")).as("cell_sig"))
+    }.filter(fastRound(cosineSim(col("a_emb"), col("b_emb")), 4) >= SemTau)
       .select(col("b_id").as("vec_id")).distinct()
     // `routed` makes the exact-vs-approximate split OBSERVABLE: true on
     // members of cells that exceeded the cap and went through band
@@ -852,7 +849,8 @@ object DedupOps {
     // (cell_n > cap) mirror stays all-false — but a cap trip at a bigger
     // SF now shows up as routed=true rows in Verify output instead of a
     // silent, opaque hash mismatch.
-    tagged.select(col("vec_id"), col("cluster"),
+    cells.rows.join(broadcast(census), "label")
+      .select(col("vec_id"), col("label").as("cluster"),
         (col("cell_n") > cellCap).as("routed"))
       .join(drops.withColumn("_d", lit(1)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cluster"), col("_d").isNull.as("keep"),

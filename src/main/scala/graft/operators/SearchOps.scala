@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.sources.IndexStore
 import graft.Checkpoints.LineageCut
 import graft.functions.VectorFunctions.cosineSim
 
@@ -286,9 +287,13 @@ object SearchOps {
     * verified by multiplication, never a float-rounded constant, so the
     * oracle replay (which interpolates the resolved value) can never
     * drift at the boundary. */
-  private[graft] def exactCellCap(spark: SparkSession): Long = {
-    val budget = knnPairBudget(spark)
-    require(budget >= 1, s"$KnnPairBudgetConf must be >= 1, got $budget")
+  private[graft] def exactCellCap(spark: SparkSession): Long =
+    exactCellCap(spark.conf.getOption _)
+
+  /** [[exactCellCap]] from a conf lookup — the form the dedup_semantic
+    * oracle replays with the active session's conf. */
+  private[graft] def exactCellCap(conf: String => Option[String]): Long = {
+    val budget = knnPairBudget(conf)
     val prod =
       if (budget > Long.MaxValue / KnnMaxSaltSlices) Long.MaxValue
       else budget * KnnMaxSaltSlices
@@ -321,9 +326,9 @@ object SearchOps {
     * inner loop also skips the two norm accumulations cosine would redo
     * per pair — bit-identical scores (see the SumSquares scaladoc).
     *
-    * Parallelism is ADAPTIVE: one thin census action over the bucketed
-    * cell sizes (rows = cells, the same routing precedent as
-    * [[vecKnnJoinAuto]]) decides the plan. A balanced corpus — every
+    * Parallelism is ADAPTIVE: the memoized label census
+    * ([[IndexStore.cellCensus]], rows = cells, the same census
+    * [[vecKnnJoinAuto]] routes by) decides the plan. A balanced corpus — every
     * cell² within [[knnPairBudget]] — takes the co-located bucket join,
     * zero exchanges. A skewed corpus (the adversarial-skew stress puts
     * 55% of vectors in one cell, which made the hot cell ONE task and
@@ -346,7 +351,7 @@ object SearchOps {
 
   private[graft] def vecKnnJoinCapped(spark: SparkSession, dir: String,
       cellCap: Long): DataFrame =
-    top3(spark, exactPairs(spark, dir, None, Some(cellCap)))
+    top3(spark, knnScored(exactPairs(spark, labelCells(spark, dir), None, Some(cellCap))))
 
   /** Pair-work budget per task for the adaptive salt in [[vecKnnJoin]]:
     * a cell of n vectors is n² scored pairs, and a cell whose n² exceeds
@@ -365,60 +370,54 @@ object SearchOps {
     * [[exactCellCap]] by construction. */
   private[graft] val KnnMaxSaltSlices = 1024L
 
-  private[graft] def knnPairBudget(spark: SparkSession): Long =
-    spark.conf.getOption(KnnPairBudgetConf).map(_.toLong)
-      .getOrElse(KnnPairBudgetDefault)
-
-  /** The per-label cell-size census over the bucketed embByLabel table,
-    * memoized (persisted) per (session, dir) via PlanCache: the exact
-    * block join, the auto router and the salt sizing all broadcast this
-    * relation, and broadcast subqueries plan their subtrees
-    * INDEPENDENTLY — ReuseExchange can never unify a census aggregate
-    * appearing under several broadcasts (nor across the post-join
-    * filters Catalyst pushes into each build side, the round-13
-    * vec_knn_join_auto plan finding). The memo makes the census
-    * structurally single: one label-count aggregate per corpus snapshot,
-    * every broadcast build a scan of the label-bounded cached relation.
-    * Same lifecycle as every PlanCache memo (session-scoped, swept by
-    * PlanCache.invalidate(dir) or by a sweep of the table it reads). */
-  private[graft] def cellCensus(spark: SparkSession, dir: String): DataFrame =
-    graft.PlanCache.getOrBuild(spark, dir, "knn:cellSizes") {
-      spark.table(graft.sources.IndexStore.index(spark, dir).embByLabel)
-        .groupBy(col("label")).agg(count(lit(1)).as("cell_n"))
-    }
+  /** The one resolver of [[KnnPairBudgetConf]]: its default and range. */
+  private[graft] def knnPairBudget(conf: String => Option[String]): Long =
+    graft.GraftConf.resolve(conf, KnnPairBudgetConf, KnnPairBudgetDefault, 1)
 
   /** The batch-KNN score of a candidate pair from its embedding and
-    * SumSquares riders ([[scoreParts]]): (label, a_id, b_id, score). */
-  private def knnScored(pairs: DataFrame): DataFrame =
-    pairs.select(col("label"), col("a_id"), col("b_id"),
-      scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss")).as("score"))
+    * SumSquares riders ([[scoreParts]]): (label, a_id, b_id, score),
+    * plus any `keep` columns. */
+  private[graft] def knnScored(pairs: DataFrame, keep: String*): DataFrame =
+    pairs.select(Seq(col("label"), col("a_id"), col("b_id"),
+      scoreParts(dot(col("a_emb"), col("b_emb")), col("a_ss"), col("b_ss"))
+        .as("score")) ++ keep.map(col): _*)
 
-  /** Exact scored pairs (label, a_id, b_id, score), one per UNORDERED
-    * pair (a_id < b_id), inside the census cells of at most `upTo`
-    * vectors (None = every cell). Census-adaptive: the co-located
-    * bucket join while every selected cell² fits [[knnPairBudget]];
-    * past it each cell is sliced into ceil(cell²/budget) salt slices
-    * (see [[vecKnnJoin]]). The salt only partitions pair ENUMERATION —
-    * side B replicates to every slice, so a pair matches exactly at a's
-    * slice and the result set is identical either way. `guardCap` plants
-    * the [[exactCellCap]] abort on side A: assert_true lives in a FILTER
-    * so column pruning cannot drop it, one comparison per row. */
-  private[graft] def exactPairs(spark: SparkSession, dir: String,
+  /** A cell-blocked relation for the pair builders: `rows` carries
+    * (label, vec_id, embedding) with `label` the cell, `census` is its
+    * (label, cell_n) cell census and `maxCell` the census maximum. */
+  private[graft] final case class Cells(rows: DataFrame, census: DataFrame,
+      maxCell: Long)
+
+  /** The IVF label cells of the bucketed index (label-bucketed, so the
+    * exact block join reads both sides co-located), with the corpus
+    * census ([[IndexStore.cellCensus]]). */
+  private[graft] def labelCells(spark: SparkSession, dir: String): Cells =
+    Cells(spark.table(IndexStore.index(spark, dir).embByLabel),
+      IndexStore.cellCensus(spark, dir), IndexStore.maxCellSize(spark, dir))
+
+  /** Exact candidate pairs, one per UNORDERED pair (a_id < b_id), inside
+    * the cells of at most `upTo` vectors (None = every cell), in
+    * [[bandPairs]]' columns (label, a_id, b_id, a_emb, b_emb, a_ss,
+    * b_ss): each caller scores them with its own expression.
+    * Census-adaptive: the plain cell join (co-located on a label-bucketed
+    * relation) while every selected cell² fits [[knnPairBudget]]; past
+    * it each cell is sliced into ceil(cell²/budget) salt slices (see
+    * [[vecKnnJoin]]). The salt only partitions pair ENUMERATION — side B
+    * replicates to every slice, so a pair matches exactly at a's slice
+    * and the pair set is identical either way. `guardCap` plants the
+    * [[exactCellCap]] abort on side A: assert_true lives in a FILTER so
+    * column pruning cannot drop it, one comparison per row. */
+  private[graft] def exactPairs(spark: SparkSession, cells: Cells,
       upTo: Option[Long], guardCap: Option[Long]): DataFrame = {
-    val budget = knnPairBudget(spark)
-    require(budget >= 1, s"$KnnPairBudgetConf must be >= 1, got $budget")
-    val emb = spark.table(graft.sources.IndexStore.index(spark, dir).embByLabel)
-    val census = cellCensus(spark, dir)
-    // the hottest SELECTED cell decides; the memoized corpus maximum
-    // answers unless a cap below it leaves the bound inconclusive
-    val maxCell = graft.sources.IndexStore.maxCellSize(spark, dir)
-    val hottest = upTo.filter(_ < maxCell).fold(maxCell) { c =>
+    val budget = knnPairBudget(spark.conf.getOption _)
+    // the hottest SELECTED cell decides; the census maximum answers
+    // unless a cap below it leaves the bound inconclusive
+    val hottest = upTo.filter(_ < cells.maxCell).fold(cells.maxCell) { c =>
       if (c * c <= budget) c
-      else census.filter(col("cell_n") <= c)
-        .agg(coalesce(max(col("cell_n")), lit(0L))).head().getLong(0)
+      else IndexStore.censusMax(cells.census.filter(col("cell_n") <= c))
     }
     val salted = hottest * hottest > budget
-    val sized = if (!salted) census else census
+    val sized = if (!salted) cells.census else cells.census
       .withColumn("cell_salt", least(greatest(
         ceil(col("cell_n") * col("cell_n") / lit(budget.toDouble)),
         lit(1L)), lit(KnnMaxSaltSlices)).cast("int"))
@@ -431,7 +430,7 @@ object SearchOps {
           .cast("int").as("slice")),
         Seq(explode(sequence(lit(0), col("cell_salt") - 1)).as("b_slice")))
     val ssq = graft.functions.VectorFunctions.sumSquares _
-    val a0 = emb
+    val a0 = cells.rows
       .select(col("label"), col("vec_id").as("a_id"), col("embedding").as("a_emb"))
       .join(broadcast(sized), "label")
       .filter(inCells)
@@ -441,10 +440,10 @@ object SearchOps {
         lit("compute; route this corpus to vec_knn_join_ann"))).isNull))
       .select(Seq(col("label"), col("a_id"), col("a_emb"),
         ssq(col("a_emb")).as("a_ss")) ++ aSlice: _*)
-    val b0 = emb.select(col("label").as("b_label"), col("vec_id").as("b_id"),
+    val b0 = cells.rows.select(col("label").as("b_label"), col("vec_id").as("b_id"),
       col("embedding").as("b_emb"))
     // an unselective, unsalted side B needs no census: the label
-    // equality alone pairs it, read co-located off the bucketed scan
+    // equality alone pairs it (co-located off a label-bucketed scan)
     val b = (if (!salted && upTo.isEmpty) b0 else b0
         .join(broadcast(sized.withColumnRenamed("label", "b_label")), "b_label")
         .filter(inCells))
@@ -458,9 +457,25 @@ object SearchOps {
       if (!salted) (a, b, lit(true))
       else (a.repartition(col("label"), col("slice")),
         b.repartition(col("b_label"), col("b_slice")), col("slice") === col("b_slice"))
-    knnScored(ja.join(jb,
-      col("label") === col("b_label") && sameSlice && col("a_id") < col("b_id")))
+    ja.join(jb, col("label") === col("b_label") && sameSlice && col("a_id") < col("b_id"))
+      .select(col("label"), col("a_id"), col("b_id"), col("a_emb"), col("b_emb"),
+        col("a_ss"), col("b_ss"))
   }
+
+  /** THE cell router, shared by [[vecKnnJoinAuto]] and
+    * [[DedupOps.dedupSemantic]]: per cell, the census size picks the
+    * path. Cells of at most `cap` vectors get [[exactPairs]]; larger
+    * cells get [[bandPairs]] over `bands(oversize)`, the caller's band
+    * rows restricted to the oversize census cells (label, cell_n) —
+    * restricting before any band explode keeps an all-exact corpus from
+    * paying for signatures. Output: [[bandPairs]]' columns plus
+    * `routed` (false = exact, true = band candidates); both branches
+    * emit each pair once, so no pair dedup follows. */
+  private[graft] def routedPairs(spark: SparkSession, cells: Cells, cap: Long)
+      (bands: DataFrame => DataFrame): DataFrame =
+    exactPairs(spark, cells, Some(cap), None).withColumn("routed", lit(false))
+      .unionAll(bandPairs(bands(cells.census.filter(col("cell_n") > cap)))
+        .withColumn("routed", lit(true)))
 
   /** The batch-KNN top-3 tail: restore both directions of a
     * once-per-unordered-pair scored stream (label, a_id, b_id, score,
@@ -858,42 +873,40 @@ object SearchOps {
     * deployment sets it to its executor task budget the way
     * [[exactCellCap]] documents (~90k at the default pair budget). */
   private[graft] val AutoCapConf = "spark.graft.knnAutoCellCap"
-
-  /** Default for [[AutoCapConf]] — shared with the oracle replay. */
   private[graft] val AutoCapDefault = 50L
+
+  /** The one resolver of [[AutoCapConf]] — the operator and its oracle
+    * replay both read the routing threshold here. */
+  private[graft] def autoCellCap(conf: String => Option[String]): Long =
+    graft.GraftConf.resolve(conf, AutoCapConf, AutoCapDefault, 0)
 
   /** Self-routing batch KNN — the smooth composition of [[vecKnnJoin]]
     * (exact, cell² compute) and [[vecKnnJoinAnn]] (banded-LSH candidates,
-    * collision-proportional compute): per label cell, the cell SIZE picks
-    * the path. Cells at or under [[AutoCapConf]] get the exact per-cell
-    * block join; larger cells get hyperplane-band candidates within the
-    * cell — the same in-plan degradation [[DedupOps.dedupSemantic]]
-    * routes oversize k-means cells through, here closing vecKnnJoin's
-    * abort-vs-route asymmetry. Every output row carries `routed` so
-    * exact-vs-approximate is observable per cell (the round-6 advisory
-    * contract), and both paths are md5-deterministic, so the driver
-    * hash-checks the ROUTER itself: the oracle replays the size census,
-    * the exact branch, and the banded branch, and must agree on which
-    * label took which.
+    * collision-proportional compute) through the shared cell router
+    * [[routedPairs]]: per label cell, the census size picks the path.
+    * Cells at or under [[AutoCapConf]] get the exact per-cell block
+    * join; larger cells get hyperplane-band candidates within the cell
+    * — the same router [[DedupOps.dedupSemantic]] sends its k-means
+    * cells through, here closing vecKnnJoin's abort-vs-route asymmetry.
+    * Every output row carries `routed` so exact-vs-approximate is
+    * observable per cell (the round-6 advisory contract), and both paths
+    * are md5-deterministic, so the driver hash-checks the ROUTER itself:
+    * the oracle replays the size census, the exact branch, and the
+    * banded branch, and must agree on which label took which.
     *
-    * Scale shape: the size census is one thin aggregate over the
-    * bucketed table; the exact branch only ever touches bounded cells
-    * (cap² compute, salt-sliced past [[knnPairBudget]] exactly as in
-    * [[vecKnnJoin]]); the routed branch pays signature
-    * collisions. No path shuffles candidate pairs — both rank through
-    * the bounded-heap TopKAgg.
+    * Scale shape: the census is one memoized thin aggregate; the exact
+    * branch only ever touches bounded cells (cap² compute, salt-sliced
+    * past [[knnPairBudget]] exactly as in [[vecKnnJoin]]); the routed
+    * branch pays signature collisions (cell_sig already folds the label,
+    * so the collision join cannot cross cells). No path shuffles
+    * candidate pairs — both rank through the bounded-heap TopKAgg.
     */
   def vecKnnJoinAuto(spark: SparkSession, dir: String): DataFrame = {
-    val cap = spark.conf.getOption(AutoCapConf).map(_.toLong)
-      .getOrElse(AutoCapDefault)
-    // routed branch: band collisions inside big cells, picked by the same
-    // memoized census the exact branch broadcasts (cell_sig already folds
-    // the label, so the collision join cannot cross cells)
-    val bands = DedupOps.embBands(spark, dir)
-      .join(broadcast(cellCensus(spark, dir)), "label")
-      .filter(col("cell_n") > cap)
-    top3(spark, exactPairs(spark, dir, Some(cap), None).withColumn("routed", lit(false))
-      .unionAll(knnScored(bandPairs(bands)).withColumn("routed", lit(true))), "routed")
+    val pairs = routedPairs(spark, labelCells(spark, dir),
+        autoCellCap(spark.conf.getOption _)) { big =>
+      DedupOps.embBands(spark, dir).join(broadcast(big), "label")
+    }
+    top3(spark, knnScored(pairs, "routed"), "routed")
   }
 
   /** FTS term scoring: term frequency of the probe terms over regex tokens,

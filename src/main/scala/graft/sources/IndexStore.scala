@@ -3,6 +3,7 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.LineageCut
 
 /** Storage layout for the materialized index: bucketed parquet tables,
   * resolved through one table registry ([[derivedBucketed]]).
@@ -68,15 +69,19 @@ object IndexStore {
     * the data under `dir` changes. Counts documents.parquet +
     * embeddings.parquet (file- or dir-shaped) — the relations the
     * bucketed tables derive from — so a corpus rewritten in place
-    * re-sizes from its CURRENT bytes after PlanCache.invalidate(dir). */
+    * re-sizes from its CURRENT bytes after PlanCache.invalidate(dir).
+    * Each present relation also resolves through its `Tables.load` scan
+    * memo, so the store derives this value's read set (those two paths)
+    * and every memo over an IndexStore table inherits a known one. */
   private def corpusBytes(spark: SparkSession, dir: String): Long =
     graft.PlanCache.memo(spark, dir, "sizing:corpusBytes") {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq("documents.parquet", "embeddings.parquet").map { name =>
-        val p = new org.apache.hadoop.fs.Path(dir, name)
+      Seq("documents", "embeddings").map { name =>
+        val p = new org.apache.hadoop.fs.Path(dir, s"$name.parquet")
         if (!fs.exists(p)) 0L
         else {
+          graft.Tables.load(spark, dir, name)
           val st = fs.getFileStatus(p)
           // dir-shaped parquet outputs: recursive — a partitioned/nested
           // layout (partitionBy subdirectories) must count its leaves,
@@ -87,18 +92,38 @@ object IndexStore {
       }.sum
     }(_ => ())
 
-  /** The hottest IVF cell's size — the census the auto LSH geometry
-    * derives its signature width from (see
-    * [[graft.operators.DedupOps.lshGeometry]]). One thin aggregate over
-    * the embeddings table, collected as a driver-side scalar (a sizing
-    * decision, not data), memoized in PlanCache until the data changes. */
+  /** The per-label cell census (label, cell_n) of the embeddings
+    * relation — the one census every cell-blocked consumer reads: the
+    * exact pair builder and the auto router broadcast it, and
+    * [[maxCellSize]] is its maximum. Persisted per (session, dir) in
+    * PlanCache: broadcast subqueries plan their subtrees INDEPENDENTLY,
+    * so ReuseExchange can never unify a census aggregate appearing under
+    * several broadcasts; the memo makes it structurally single, every
+    * broadcast build a scan of the label-bounded cached relation. Read
+    * from the embeddings scan, not the bucketed index: its read set is
+    * the embeddings path, and it needs no index build, so it works on
+    * an embeddings-only corpus too. That scan is not label-bucketed, so
+    * the aggregate shuffles once, at build; the lineage cut keeps that
+    * build out of every consumer's plan (the cut records the read set). */
+  def cellCensus(spark: SparkSession, dir: String): DataFrame =
+    graft.PlanCache.getOrBuild(spark, dir, "sizing:cellCensus") {
+      graft.Tables.embeddings(spark, dir)
+        .groupBy(col("label")).agg(count(lit(1)).as("cell_n")).lineageCut
+    }
+
+  /** The hottest IVF cell's size: the maximum of [[cellCensus]] (0 on
+    * an empty corpus), collected as a driver-side scalar (a sizing
+    * decision, not data) — the bound the auto LSH geometry derives its
+    * signature width from (see
+    * [[graft.operators.DedupOps.lshGeometry]]) and the salt decision's
+    * corpus-wide answer. Memoized in PlanCache until the data changes. */
   def maxCellSize(spark: SparkSession, dir: String): Long =
-    graft.PlanCache.memo(spark, dir, "sizing:maxCellSize") {
-      val rows = graft.Tables.embeddings(spark, dir)
-        .groupBy(col("label")).agg(count(lit(1)).as("n"))
-        .agg(max(col("n"))).collect()
-      if (rows.isEmpty || rows(0).isNullAt(0)) 0L else rows(0).getLong(0)
-    }(_ => ())
+    graft.PlanCache.memo(spark, dir, "sizing:maxCellSize")(
+      censusMax(cellCensus(spark, dir)))(_ => ())
+
+  /** The largest `cell_n` of a (label, cell_n) census, 0 when empty. */
+  def censusMax(census: DataFrame): Long =
+    census.agg(coalesce(max(col("cell_n")), lit(0L))).head().getLong(0)
 
   /** The churn slice's doc count — the routing scalar dedup_incremental's
     * broadcast-vs-shuffle decision reads (see
@@ -123,9 +148,8 @@ object IndexStore {
     * if set, else auto-sized from the corpus bytes (see [[BucketsConf]]). */
   def buckets(spark: SparkSession, dir: String): Int =
     pinned(spark).getOrElse {
-      val target = spark.conf.getOption(TargetBytesConf).map(_.toLong)
-        .getOrElse(TargetBytesDefault)
-      require(target >= 1, s"$TargetBytesConf must be >= 1, got $target")
+      val target = graft.GraftConf.resolve(spark.conf.getOption _, TargetBytesConf,
+        TargetBytesDefault, 1)
       val want = (corpusBytes(spark, dir) + target - 1) / target
       // NO parallelism floor toward the session's cores. Re-measured at
       // sf1 in round 14 (pinned indexBuckets 8 vs 32, same filtered

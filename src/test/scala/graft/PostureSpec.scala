@@ -49,24 +49,30 @@ class PostureSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("census-adaptive salt: sliced plan is result-identical and exchanges") {
-    import operators.SearchOps
-    val plain = SparkEntry.queries("vec_knn_join")(spark, SfDir)
-      .collect().map(_.toString).sorted.toSeq
+    import operators.{DedupOps, SearchOps}
+    // the exact pair builder's two callers: vec_knn_join's label cells and
+    // dedup_semantic's k-means cells (its unmemoized form, so each budget
+    // builds its own plan)
+    val inputs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "vec_knn_join" -> (() => SparkEntry.queries("vec_knn_join")(spark, SfDir)),
+      "dedup_semantic" -> (() =>
+        DedupOps.dedupSemanticCapped(spark, SfDir, SearchOps.exactCellCap(spark))))
+    val plain = inputs.map(_._2().collect().map(_.toString).sorted.toSeq)
     // a 64-pair budget forces every cell oversize (cells here are 40-63,
     // so cell² ≫ 64 → salted path) while the DERIVED exact-cell cap,
     // isqrt(64·1024) = 256, stays above the largest cell — the cap and
     // the slicer share the budget, and this test wants slicing, not the
     // past-the-cap abort
     spark.conf.set(SearchOps.KnnPairBudgetConf, "64")
-    try {
-      val df = SparkEntry.queries("vec_knn_join")(spark, SfDir)
+    try inputs.zip(plain).foreach { case ((name, input), rows) =>
+      val df = input()
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("hashpartitioning(label") && plan.contains("slice"),
-        "the sliced path must EXPLICITLY exchange on (label, slice) — the " +
+        s"$name: the sliced path must EXPLICITLY exchange on (label, slice) — the " +
           "bucketed scan's label partitioning satisfies the join without it " +
           s"and the salt would spread nothing:\n$plan")
-      assert(df.collect().map(_.toString).sorted.toSeq == plain,
-        "slicing partitions pair enumeration only; results must be identical")
+      assert(df.collect().map(_.toString).sorted.toSeq == rows,
+        s"$name: slicing partitions pair enumeration only; results must be identical")
     } finally spark.conf.unset(SearchOps.KnnPairBudgetConf)
   }
 

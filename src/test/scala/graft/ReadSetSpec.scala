@@ -150,4 +150,30 @@ class ReadSetSpec extends AnyFunSuite with SparkFixture {
       WatchLoop.stop(spark, SfDir)
     }
   }
+
+  test("dedup_winnow's memo survives an edge batch and drops with its documents") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val mem = MemoryStream[(Long, Long)]
+    val q = WatchLoop.start(spark, SfDir, mem.toDF().toDF("src", "dst"))
+    def sel() = PlanCache.lookup(spark, SfDir, "winnowSel").map(_.asInstanceOf[AnyRef])
+    try {
+      // its build resolves the bucketed docs table, sized from the corpus
+      // bytes: every source it reads has a known read set
+      operators.DedupOps.dedupWinnow(spark, SfDir)
+      val installed = sel()
+      assert(installed.nonEmpty)
+      mem.addData((1L, 990101L))
+      q.processAllAvailable()
+      assert(WatchLoop.ledgers.get((spark, SfDir)).lastElement().n_new_edges == 1,
+        "the batch appended its edge and swept the edge table")
+      assert(sel().exists(_ eq installed.get), "winnowSel is a hit across an edge batch")
+      PlanCache.invalidate(SfDir, s"$SfDir/documents.parquet")
+      assert(sel().isEmpty, "a sweep of the documents drops winnowSel")
+    } finally {
+      q.stop()
+      WatchLoop.stop(spark, SfDir)
+    }
+  }
 }
