@@ -18,6 +18,15 @@ import graft.functions.VectorFunctions.cosineSim
   * shuffle, no sort of the full set); IVF prunes to one coarse cell via a
   * parquet-pushed label filter; the KNN self-join only pairs rows within a
   * cell — never a global cross join.
+  *
+  * Single-query KNN is one scan stage: the query vector is a request
+  * parameter bound into the plan as a literal (the reference binds it
+  * into its one KNN statement, search_sqlite.go:53), read once per
+  * (session, dir) and memoized like index state ([[queryVec]]), never
+  * looked up and broadcast per request. The multi-probe ops rank their
+  * k centroids on the driver from a resident copy of the centroid memo
+  * ([[nearestCells]]) and hand the scan a literal cell set, so no probe
+  * job or broadcast precedes the search scan.
   */
 object SearchOps {
 
@@ -214,10 +223,33 @@ object SearchOps {
   private val QueryVecId = 0
   private val QueryLabel = 2
 
-  private def queryVec(spark: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === QueryVecId)
-      .select(col("embedding").as("q_emb"))
+  /** The query vector, collected once per (session, dir) as a value memo
+    * whose read set is the embeddings table: an edge batch keeps it, a
+    * sweep of the embeddings drops it. None when the corpus holds no
+    * `vec_id` [[QueryVecId]] row; more than one is ambiguous and fails
+    * loudly rather than multiplying every answer. */
+  private def queryVec(spark: SparkSession, dir: String): Option[Array[Float]] =
+    graft.PlanCache.memo(spark, dir, "queryVec") {
+      Tables.embeddings(spark, dir)
+        .filter(col("vec_id") === QueryVecId)
+        .select(col("embedding"))
+        .collect() match {
+          case Array() => None
+          case Array(r) => Some(r.getSeq[Float](0).toArray)
+          case rs => throw new IllegalStateException(
+            s"$dir/embeddings holds ${rs.length} rows with vec_id $QueryVecId; " +
+              "the query vector must be unique")
+        }
+    }(_ => ())
+
+  /** `df` with the query vector bound as the typed array<float> literal
+    * column `q_emb` — a projection, no join. Without a query vector the
+    * answer is empty, as the cross join with an empty probe was. */
+  private def withQuery(spark: SparkSession, dir: String)(df: DataFrame): DataFrame =
+    queryVec(spark, dir) match {
+      case Some(q) => df.withColumn("q_emb", typedLit(q))
+      case None => df.where(lit(false)).withColumn("q_emb", lit(null).cast("array<float>"))
+    }
 
   /** Rounded cosine between two embedding columns (codegen'd expression;
     * fastRound = Spark-round-identical without per-row BigDecimal). */
@@ -243,13 +275,13 @@ object SearchOps {
     aggregate(graft.functions.ArrayFunctions.termFreqs(toks, Terms),
       lit(0L), (acc, x) => acc + x).cast("int")
 
-  /** Brute-force cosine top-k against a broadcast single-row query vector.
+  /** Brute-force cosine top-k against the literal query vector.
     * One scan, no shuffle; the limit is a TakeOrderedAndProject.
     */
   def vecKnnBrute(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .filter(col("vec_id") =!= QueryVecId)
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("vec_id"), score(col("embedding"), col("q_emb")).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
       .limit(10)
@@ -261,7 +293,7 @@ object SearchOps {
   def vecKnnIvf(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .filter(col("label") === QueryLabel && col("vec_id") =!= QueryVecId)
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("vec_id"), col("label"),
         score(col("embedding"), col("q_emb")).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -507,7 +539,7 @@ object SearchOps {
     * which is nondeterministic). At 100 TB this is a k-means iteration's
     * assignment step; here labels are the fixed coarse cells.
     */
-  private def centroids(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
     graft.PlanCache.getOrBuild(spark, dir, "ivfCentroids") {
       Tables.embeddings(spark, dir)
         .select(col("label"), posexplode(col("embedding")))
@@ -519,25 +551,51 @@ object SearchOps {
           transform(col("s"), x => x.getField("cv")).as("centroid"))
     }
 
+  /** The `nprobe` cells nearest the query, ranked on the driver over a
+    * resident copy of a (key, centroid) memo: the engine's own
+    * Round(CosineSimilarity(centroid, q), 4), evaluated on the literals
+    * (the arithmetic the codegen'd expression runs), ordered by Spark's
+    * double ordering descending, then key ascending. The resident state is
+    * k centroids, corpus-sublinear; its read set is the centroid memo's.
+    * Empty without a query vector. */
+  private def nearestCells(spark: SparkSession, dir: String, tag: String,
+      nprobe: Int)(cents: => DataFrame): Seq[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    val resident = graft.PlanCache.memo(spark, dir, s"$tag:resident")(
+      cents.collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+    )(_ => ())
+    queryVec(spark, dir).toSeq.flatMap { q =>
+      val qLit = Literal.create(q, ArrayType(FloatType))
+      resident.toSeq.map { case (key, c) =>
+        key -> Round(graft.functions.CosineSimilarity(
+          Literal.create(c, ArrayType(DoubleType)), qLit), Literal(4)).eval().asInstanceOf[Double]
+      }.sortWith { case ((ka, a), (kb, b)) =>
+        val c = SQLOrderingUtil.compareDoubles(b, a)
+        if (c != 0) c < 0 else ka < kb
+      }.take(nprobe).map(_._1)
+    }
+  }
+
+  /** The `nprobe` IVF cells (labels) nearest the query. */
+  private[graft] def ivfCells(spark: SparkSession, dir: String, nprobe: Int): Seq[Int] =
+    nearestCells(spark, dir, "ivfCentroids", nprobe)(ivfCentroids(spark, dir))
+
   /** Multi-probe IVF KNN: rank the coarse cells by query→centroid cosine,
     * probe the closest `nprobe` cells, and scan ONLY those for the exact
     * top-k — the real IVF search loop (quantize → probe → refine), where
     * [[vecKnnIvf]] is the 1-probe special case with the cell given. The
-    * probed label set broadcasts into the scan as a join filter, so the
-    * big relation still reads ~nprobe/L of its rows.
+    * cells are ranked on the driver ([[ivfCells]]) and reach the scan as
+    * a literal `label IN (…)` that pushes into the parquet scan, so the
+    * request is one scan stage reading ~nprobe/L of the rows.
     */
   def vecKnnIvfProbe(spark: SparkSession, dir: String): DataFrame = {
     val nprobe = 2
-    val probed = centroids(spark, dir)
-      .crossJoin(broadcast(queryVec(spark, dir)))
-      .select(col("label"),
-        round(cosineSim(col("centroid"), col("q_emb")), 4).as("cscore"))
-      .orderBy(col("cscore").desc, col("label"))
-      .limit(nprobe)
     Tables.embeddings(spark, dir)
-      .join(broadcast(probed.select(col("label"))), "label")
+      .filter(col("label").isin(ivfCells(spark, dir, nprobe): _*))
       .filter(col("vec_id") =!= QueryVecId)
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("vec_id"), col("label"),
         score(col("embedding"), col("q_emb")).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -629,40 +687,34 @@ object SearchOps {
       .orderBy(col("vec_id"))
 
   /** KNN through the TRAINED quantizer: rank the learned centroids by
-    * squared distance to the query, probe the nearest cluster, exact
-    * cosine top-k inside it — the full train/quantize/probe/refine IVF
-    * loop where vec_knn_ivf* cell on the GIVEN label column. The probed
-    * cluster id broadcasts into the assignment relation, so only that
-    * cluster's vectors are scored. */
+    * cosine to the query, probe the nearest cluster, exact cosine top-k
+    * inside it — the full train/quantize/probe/refine IVF loop where
+    * vec_knn_ivf* cell on the GIVEN label column. The probed cluster id
+    * filters the assignment relation as a literal, so only that cluster's
+    * vectors are scored. */
   def vecKnnKmeans(spark: SparkSession, dir: String): DataFrame =
     vecKnnKmeansProbes(spark, dir, 1)
 
-  /** The nprobe nearest trained clusters to the query (used by the KNN
-    * plan as a broadcast filter, and by the recall study directly).
-    * Ranks centroids by COSINE, matching the refinement metric — probing
-    * by unnormalized L2 here would pick the magnitude-nearest centroid,
-    * not the direction-nearest one, and systematically miss the cosine
-    * neighborhood at low nprobe. (Training still uses L2, as Lloyd does;
-    * a production cosine index would normalize vectors so the two
+  /** The nprobe nearest trained clusters to the query, ranked on the
+    * driver ([[nearestCells]]) by COSINE, matching the refinement metric —
+    * probing by unnormalized L2 here would pick the magnitude-nearest
+    * centroid, not the direction-nearest one, and systematically miss the
+    * cosine neighborhood at low nprobe. (Training still uses L2, as Lloyd
+    * does; a production cosine index would normalize vectors so the two
     * coincide.) */
-  private[graft] def kmeansProbe(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame =
-    kmeansCents(spark, dir)
-      .crossJoin(broadcast(queryVec(spark, dir)))
-      .select(col("cluster"),
-        round(cosineSim(col("c"), col("q_emb")), 4).as("cscore"))
-      .orderBy(col("cscore").desc, col("cluster"))
-      .limit(nprobe)
+  private[graft] def kmeansCells(spark: SparkSession, dir: String, nprobe: Int): Seq[Int] =
+    nearestCells(spark, dir, "kmeansCents", nprobe)(kmeansCents(spark, dir))
 
   /** nprobe-parameterized form — the recall/cost knob every IVF index
-    * exposes; docs/SCALE_NOTES.md carries the measured recall curve. */
+    * exposes; docs/SCALE_NOTES.md carries the measured recall curve. The
+    * probed clusters reach the cached assignment scan as a literal
+    * `cluster IN (…)`: one scan stage, no probe job. */
   def vecKnnKmeansProbes(spark: SparkSession, dir: String,
       nprobe: Int): DataFrame = {
-    val probed = kmeansProbe(spark, dir, nprobe)
     kmeansAssigned(spark, dir)
-      .join(broadcast(probed.select(col("cluster"))), "cluster")
+      .filter(col("cluster").isin(kmeansCells(spark, dir, nprobe): _*))
       .filter(col("vec_id") =!= QueryVecId)
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("vec_id"), col("cluster"),
         score(col("v"), col("q_emb")).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
@@ -795,8 +847,8 @@ object SearchOps {
   def vecKnnPq(spark: SparkSession, dir: String): DataFrame = {
     val k = 10
     val qSub = pqSubRows(l2normalized(
-      queryVec(spark, dir).select(lit(0L).as("vec_id"),
-        col("q_emb").cast("array<double>").as("v"))))
+      spark.range(1).select(lit(0L).as("vec_id")).transform(withQuery(spark, dir))
+        .select(col("vec_id"), col("q_emb").cast("array<double>").as("v"))))
     // ADC lookup tables: per subspace, map cluster -> dot(q_m, c_{m,cl})
     val lutCols = (0 until PqM).map(m =>
       map_from_entries(collect_list(
@@ -818,7 +870,7 @@ object SearchOps {
       .limit(PqRerank)
     Tables.embeddings(spark, dir)
       .join(broadcast(approx.select(col("vec_id"))), "vec_id")
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("vec_id"), score(col("embedding"), col("q_emb")).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
       .limit(k)
@@ -937,13 +989,13 @@ object SearchOps {
   def hybridSearch(spark: SparkSession, dir: String): DataFrame = {
     // both sides come pre-bucketed on the join key from the IndexStore
     // (docs even pre-tokenized — index-time work), so this fact-fact join
-    // runs exchange-free; only the broadcast query vector moves
+    // runs exchange-free; the query vector is a literal, nothing moves
     val idx = graft.sources.IndexStore.index(spark, dir)
     val docs = spark.table(idx.docs).select(col("doc_id"), col("toks"))
     val emb = spark.table(idx.embById)
       .select(col("vec_id"), col("embedding"))
     docs.join(emb, docs("doc_id") === emb("vec_id"))
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("doc_id"),
         graft.functions.VectorFunctions.fastRound(lit(0.5) * cosineSim(col("embedding"), col("q_emb")) +
           lit(0.5) * (termScore(col("toks")).cast("double") /
@@ -1087,7 +1139,7 @@ object SearchOps {
   def vecKnnMinScore(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .filter(col("vec_id") =!= QueryVecId)
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("vec_id"), score(col("embedding"), col("q_emb")).as("score"))
       .filter(col("score") >= 0.25)
       .orderBy(col("score").desc, col("vec_id"))
@@ -1104,7 +1156,7 @@ object SearchOps {
     val k = 10
     Tables.embeddings(spark, dir)
       .filter(col("vec_id") =!= QueryVecId)
-      .crossJoin(broadcast(queryVec(spark, dir)))
+      .transform(withQuery(spark, dir))
       .select(col("vec_id"), col("label"),
         score(col("embedding"), col("q_emb")).as("score"))
       .orderBy(col("score").desc, col("vec_id"))

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +26,19 @@ object SparkFixture {
       shared = GraftSession(dir, "spark.sql.warehouse.dir" ->
         TempDirs("graft-wh").toString)
     shared
+  }
+
+  /** The physical nodes of `df`'s executed plan, adaptive query stages
+    * entered. A cached memo's build plan (an InMemoryRelation's
+    * cachedPlan) is not a child of its scan and is not entered: it ran
+    * once at build, not per query. */
+  def planNodes(df: DataFrame): Seq[SparkPlan] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+
+  /** The hash-partitioned shuffles on `df`'s own query path. */
+  def hashExchanges(df: DataFrame): Int = planNodes(df).count {
+    case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[HashPartitioning]
+    case _ => false
   }
 }
 
@@ -166,23 +183,11 @@ class SparkEntrySpec extends AnyFunSuite with SparkFixture {
     val df = operators.SearchOps.vecKnnPq(spark, SfDir)
     assert(df.count() == 10)
     val plan = df.queryExecution.executedPlan.toString
-    // drop InMemoryRelation subtrees: they spell out the CACHED one-time
-    // codebook/code builds (which legitimately aggregate); the assertion
-    // is about the per-query path
-    def depth(l: String): Int = l.indexWhere(c => c != ' ' && c != ':' && c != '+' && c != '-')
-    val queryPath = new StringBuilder
-    var skipBelow = -1
-    plan.linesIterator.foreach { l =>
-      val d = math.max(depth(l), 0)
-      if (skipBelow >= 0 && d <= skipBelow) skipBelow = -1
-      if (skipBelow < 0) {
-        if (l.contains("InMemoryRelation")) skipBelow = d
-        else queryPath.append(l).append('\n')
-      }
-    }
-    // the LUT global agg legitimately gathers <= PqM*PqK thin rows to one
-    // partition; the CODES side must stay scan + broadcast + TakeOrdered
-    assert(!queryPath.toString.contains("Exchange hashpartitioning"),
+    // the cached one-time codebook/code builds (which legitimately
+    // aggregate) are not on the query path; the LUT global agg gathers
+    // <= PqM*PqK thin rows to one partition; the CODES side must stay
+    // scan + broadcast + TakeOrdered
+    assert(SparkFixture.hashExchanges(df) == 0,
       s"ADC must be broadcast-only:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"),
       s"top-k must be a bounded TakeOrdered, not a global sort:\n$plan")
@@ -2014,9 +2019,6 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  private def countExchanges(plan: String): Int =
-    "Exchange hashpartitioning".r.findAllIn(plan).size
-
   test("hybrid_search over the bucketed index joins exchange-free") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -2024,7 +2026,7 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
       val df = operators.SearchOps.hybridSearch(spark, SfDir)
       assert(df.count() > 0)
       val plan = df.queryExecution.executedPlan.toString
-      assert(countExchanges(plan) == 0,
+      assert(SparkFixture.hashExchanges(df) == 0,
         s"bucketed docs-embeddings join must not shuffle:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
@@ -2036,7 +2038,7 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
       val df = operators.SearchOps.vecKnnJoin(spark, SfDir)
       assert(df.count() > 0)
       val plan = df.queryExecution.executedPlan.toString
-      assert(countExchanges(plan) <= 1,
+      assert(SparkFixture.hashExchanges(df) <= 1,
         s"candidate pairs must not shuffle (only the agg may):\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
@@ -2174,7 +2176,7 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
       val df = operators.DedupOps.simhashCandidates(spark, SfDir)
       assert(df.count() > 0)
       val plan = df.queryExecution.executedPlan.toString
-      assert(countExchanges(plan) == 0,
+      assert(SparkFixture.hashExchanges(df) == 0,
         s"band self-join must be exchange-free over the bucketed table:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
@@ -2292,7 +2294,7 @@ class IndexStoreSpec extends AnyFunSuite with SparkFixture {
       val plan = df.queryExecution.executedPlan.toString
       // one exchange belongs to the thin surviving-pairs distinct; the
       // band self-join itself reads both sides co-located
-      assert(countExchanges(plan) <= 1,
+      assert(SparkFixture.hashExchanges(df) <= 1,
         s"band self-join must be exchange-free over the bucketed table:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }

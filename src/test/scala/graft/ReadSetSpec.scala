@@ -123,7 +123,9 @@ class ReadSetSpec extends AnyFunSuite with SparkFixture {
     try {
       val probe = rows(operators.SearchOps.vecKnnIvfProbe(spark, SfDir))
       answers()
-      def kept() = Seq("bfs:dependents", "ivfCentroids")
+      // the query vector and the resident centroids read only the embeddings
+      val vectorMemos = Seq("queryVec", "ivfCentroids", "ivfCentroids:resident")
+      def kept() = ("bfs:dependents" +: vectorMemos)
         .map(t => PlanCache.lookup(spark, SfDir, t).map(_.asInstanceOf[AnyRef]))
       def hits(before: Seq[Option[AnyRef]]) =
         kept().zip(before).forall { case (x, y) => x.exists(_ eq y.get) }
@@ -134,8 +136,8 @@ class ReadSetSpec extends AnyFunSuite with SparkFixture {
         val part = 990000L + b
         mem.addData((1L, part), (20L + b, part))
         q.processAllAvailable()
-        assert(hits(installed),
-          "the dependents BFS and the IVF centroids are hits across an edge batch")
+        assert(hits(installed), "the dependents BFS, the query vector and the " +
+          "IVF centroids are hits across an edge batch")
         val memo = answers()
         assert(memo.head.contains(s"1,part,$part"), "graph_khop sees the new edge")
         assert(rows(operators.SearchOps.vecKnnIvfProbe(spark, SfDir)) == probe)
@@ -145,6 +147,12 @@ class ReadSetSpec extends AnyFunSuite with SparkFixture {
           "memoized answers equal the answers after a dir-wide sweep")
         installed = { operators.SearchOps.vecKnnIvfProbe(spark, SfDir); kept() }
       }
+      PlanCache.invalidate(SfDir, s"$SfDir/embeddings.parquet")
+      vectorMemos.foreach { t =>
+        assert(PlanCache.lookup(spark, SfDir, t).isEmpty, s"a sweep of the embeddings drops $t")
+      }
+      assert(PlanCache.lookup(spark, SfDir, "bfs:dependents").nonEmpty,
+        "a sweep of the embeddings keeps the dependents BFS")
     } finally {
       q.stop()
       WatchLoop.stop(spark, SfDir)
