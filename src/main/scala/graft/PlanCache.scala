@@ -9,8 +9,12 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The one in-memory memo: every value that is reused until the data
-  * under a dir changes — persisted builds, resolved parquet scans, sizing
-  * scalars, JSONL copies — lives here, keyed by the session REFERENCE
+  * under a dir changes — persisted builds, resolved parquet scans,
+  * prepared registry queries (the analyzed plan of each
+  * [[SparkEntry.queries]] entry, held only under the SQL conf it was
+  * built under, see [[memoUnder]]), sizing scalars and other
+  * index-wide values (BM25's corpus statistics), JSONL copies — lives
+  * here, keyed by the session REFERENCE
   * (not its identity hash — a GC'd session's hash can collide with a live
   * one's) plus the data dir and a tag. An entry is a value, the action
   * that releases it (unpersist, delete a copy, or nothing) and its READ
@@ -54,10 +58,11 @@ object PlanCache {
   /** Memoized value, its release action, the epoch snapshot it was
     * built against — lookups compare the entry's epoch to the CALLER's
     * snapshot so a chained build never mixes layers from different
-    * corpus snapshots (see [[getOrBuildAt]]) — and its read set.
+    * corpus snapshots (see [[getOrBuildAt]]) — its read set, and the key
+    * it holds under ([[memoUnder]]; `()` for every other memo).
     * Compared by identity. */
   private final class Entry(val value: Any, val epoch: Long,
-      val reads: Reads, val release: () => Unit)
+      val reads: Reads, val key: Any, val release: () => Unit)
 
   private val cache =
     new ConcurrentHashMap[(SparkSession, String, String), Entry]()
@@ -111,14 +116,27 @@ object PlanCache {
     * persisted at build and unpersisted at release. */
   def getOrBuildAt(spark: SparkSession, dir: String, tag: String,
       asOfEpoch: Long)(build: => DataFrame): DataFrame =
-    memoAt(spark, dir, tag, asOfEpoch)(build.persist())(_.unpersist())
+    memoAt(spark, dir, tag, asOfEpoch, ())(build.persist())(_.unpersist())
 
   /** The memo for any value: `build` runs on a miss, `release` when the
     * entry is dropped or swept, and on a built value the store does not
     * keep. Same epoch rules as [[getOrBuildAt]], snapshot = now. */
   def memo[T](spark: SparkSession, dir: String, tag: String)
       (build: => T)(release: T => Unit): T =
-    memoAt(spark, dir, tag, epoch.get())(build)(release)
+    memoAt(spark, dir, tag, epoch.get(), ())(build)(release)
+
+  /** [[memo]] of a value that holds only under `key`, compared by value
+    * (a prepared registry query and the session SQL conf its operators
+    * resolved their knobs from, see [[SparkEntry.queries]]). An entry
+    * built under another key is a miss, and is dropped and released, so
+    * the new build REPLACES it: one entry per tag, never one per key.
+    * `key` is read at the lookup and again after a build, and the entry
+    * keeps the latter: a build that settles the key itself (a first
+    * table load sets the session's timestamp posture) is then a hit for
+    * the next call. */
+  def memoUnder[T](spark: SparkSession, dir: String, tag: String)
+      (key: => Any)(build: => T)(release: T => Unit): T =
+    memoAt(spark, dir, tag, epoch.get(), key)(build)(release)
 
   /** What the builds running on this thread have touched so far, one
     * frame per nested build, innermost first. */
@@ -133,12 +151,16 @@ object PlanCache {
     for (x <- a; y <- b) yield x ++ y
 
   private def memoAt[T](spark: SparkSession, dir: String, tag: String,
-      asOfEpoch: Long)(build: => T)(release: T => Unit): T = {
+      asOfEpoch: Long, holdsUnder: => Any)(build: => T)(release: T => Unit): T = {
     cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val key = (spark, dir, tag)
     val existing = cache.get(key)
+    val wanted = holdsUnder
+    if (existing != null && existing.key != wanted &&
+        cache.remove(key, existing)) releaseQuietly(existing)
     val (value, reads) =
-      if (existing != null && existing.epoch <= asOfEpoch)
+      if (existing != null && existing.epoch <= asOfEpoch &&
+          existing.key == wanted)
         (existing.value.asInstanceOf[T], existing.reads)
       else {
         // NOT computeIfAbsent: a build closure may itself call the memo
@@ -154,14 +176,18 @@ object PlanCache {
           case df: Dataset[_] => readsOf(df.queryExecution.analyzed)
           case _ => if (frame.touched) Some(Set.empty[String]) else None
         })
-        val entry = new Entry(built, asOfEpoch, reads, () => release(built))
+        val builtUnder = holdsUnder
+        val entry = new Entry(built, asOfEpoch, reads, builtUnder,
+          () => release(built))
         val out =
           if (sweptSince(dir, reads) > asOfEpoch) { releaseQuietly(entry); built }
           else {
             val prev = cache.putIfAbsent(key, entry)
             if (prev != null) {
               releaseQuietly(entry)
-              if (prev.epoch <= asOfEpoch) prev.value.asInstanceOf[T] else built
+              if (prev.epoch <= asOfEpoch && prev.key == builtUnder)
+                prev.value.asInstanceOf[T]
+              else built
             } else if (sweptSince(dir, reads) > asOfEpoch) {
               // TOCTOU: a sweep marked+swept BETWEEN the check above and
               // the install — our entry landed after the sweep and would

@@ -264,7 +264,7 @@ object SearchOps {
     graft.functions.VectorFunctions.fastRound(
       graft.functions.VectorFunctions.cosineFromParts(dotC, ssa, ssb), 4)
 
-  private val Terms = Seq("data", "query", "table")
+  private[graft] val Terms = Seq("data", "query", "table")
 
   private def tokens(c: Column): Column = graft.functions.Tokenize.tokens(c)
 
@@ -988,8 +988,10 @@ object SearchOps {
     */
   def hybridSearch(spark: SparkSession, dir: String): DataFrame = {
     // both sides come pre-bucketed on the join key from the IndexStore
-    // (docs even pre-tokenized — index-time work), so this fact-fact join
-    // runs exchange-free; the query vector is a literal, nothing moves
+    // (docs even pre-tokenized — index-time work), so above the broadcast
+    // threshold this fact-fact join runs exchange-free on the buckets;
+    // below it (1 MB of docs at sf0.01) the planner broadcasts the docs
+    // side instead. The query vector is a literal either way.
     val idx = graft.sources.IndexStore.index(spark, dir)
     val docs = spark.table(idx.docs).select(col("doc_id"), col("toks"))
     val emb = spark.table(idx.embById)
@@ -1008,58 +1010,79 @@ object SearchOps {
     * Okapi at TREC-3) — the actual FTS5 scorer cortex uses
     * (internal/mcp/exact_sqlite.go:141 ORDER BY bm25).
     *
-    * Corpus stats (N, avgdl, per-term document frequencies) reduce to a
-    * single broadcast row — one tiny aggregate, then a stateless codegen'd
-    * scoring scan; no shuffle of the corpus itself.
+    * Corpus stats (N, avgdl, per-term document frequencies) are a value
+    * memo bound into the scoring projection as literals — one stateless
+    * codegen'd scoring scan; no aggregate, no join, no shuffle.
     */
-  /** Every document with its BM25 score over the probe terms, plus the
-    * columns downstream consumers rank/filter/snippet on. Corpus stats
-    * (N, avgdl, dfs) are INDEX-wide — computed over the whole corpus
-    * before any query-time filter, as FTS5's rank is — and reduce to a
-    * single broadcast row. */
-  private def bm25ScoredOver(docs0: DataFrame, carry: Seq[String]): DataFrame = {
+  /** Per document: `carry`, the tokens `ts`, the length `dl` and each
+    * probe term's frequency `tf<i>`. `docs0` must carry (doc_id, ts)
+    * plus the pass-through columns — the rank-only consumer (ftsBm25)
+    * feeds the pre-tokenized index with no text columns at all, the page
+    * consumer keeps them. */
+  private def bm25Base(docs0: DataFrame, carry: Seq[String]): DataFrame = {
     // per-term tf in ONE native token-array pass (TermFreqs) instead of
     // an interpreted ArrayFilter walk per term; the tfs array is its own
     // aliased stage so the pass runs once however the plan collapses.
-    // `docs0` must carry (doc_id, ts) plus the pass-through columns —
-    // the rank-only consumer (ftsBm25) feeds the pre-tokenized index
-    // with no text columns at all, the page consumer keeps them.
     val baseCols = (Seq(col("doc_id")) ++ carry.map(col) :+ col("ts") :+
       size(col("ts")).cast("double").as("dl")) ++
       Terms.indices.map { i =>
         element_at(col("tfs"), i + 1).cast("double").as(s"tf$i")
       }
-    val base = docs0
+    docs0
       .withColumn("tfs",
         graft.functions.ArrayFunctions.termFreqs(col("ts"), Terms))
       .select(baseCols: _*)
-    val statCols = Seq(
-      count(lit(1)).cast("double").as("n_docs"), avg(col("dl")).as("avgdl")) ++
-      Terms.indices.map { i =>
-        sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double").as(s"df$i")
-      }
-    val stats = base.agg(statCols.head, statCols.tail: _*)
+  }
+
+  private def indexedTs(spark: SparkSession, dir: String): DataFrame =
+    PatternOps.indexedToks(spark, dir).select(col("doc_id"), col("toks").as("ts"))
+
+  /** BM25's corpus statistics: N, avgdl and the document frequency of
+    * each probe term, in that order (null avgdl and dfs over an empty
+    * corpus). INDEX-wide — computed over the whole corpus before any
+    * query-time filter, as FTS5's rank is — and, as FTS5 stores them, a
+    * value memo: collected once from the pre-tokenized index, swept with
+    * the corpus tables the index is built and sized from. All five are
+    * counts and sums of integers, so they do not depend on the order the
+    * aggregate met the rows. */
+  private[graft] def bm25Stats(spark: SparkSession, dir: String): Seq[Any] =
+    graft.PlanCache.memo(spark, dir, "bm25:stats") {
+      val statCols = Seq(count(lit(1)).cast("double"), avg(col("dl"))) ++
+        Terms.indices.map { i =>
+          sum(when(col(s"tf$i") > 0, 1).otherwise(0)).cast("double")
+        }
+      bm25Base(indexedTs(spark, dir), Nil)
+        .agg(statCols.head, statCols.tail: _*).head().toSeq
+    }(_ => ())
+
+  /** Every document of `docs0` with its BM25 score over the probe terms,
+    * plus the `carry` columns downstream consumers rank/filter/snippet
+    * on, scored against the index-wide [[bm25Stats]]; `docs0` must
+    * tokenize as the index does (`Tokenize.tokens`). */
+  private def bm25ScoredOver(spark: SparkSession, dir: String,
+      docs0: DataFrame, carry: Seq[String]): DataFrame = {
+    val stats = bm25Stats(spark, dir).map(lit(_).cast("double"))
+    val (nDocs, avgdl, dfs) = (stats(0), stats(1), stats.drop(2))
     val k1 = 1.2; val b = 0.75
     val score = Terms.indices.map { i =>
-      val idf = log((col("n_docs") - col(s"df$i") + 0.5) / (col(s"df$i") + 0.5) + 1)
-      val norm = col(s"tf$i") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("avgdl"))
+      val idf = log((nDocs - dfs(i) + 0.5) / (dfs(i) + 0.5) + 1)
+      val norm = col(s"tf$i") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)
       idf * (col(s"tf$i") * lit(k1 + 1)) / norm
     }.reduce(_ + _)
-    base.crossJoin(broadcast(stats))
+    bm25Base(docs0, carry)
       .select(Seq(col("doc_id")) ++ carry.map(col) :+ col("ts") :+
         graft.functions.VectorFunctions.fastRound(score, 4).as("score"): _*)
   }
 
   private def bm25Scored(spark: SparkSession, dir: String): DataFrame =
-    bm25ScoredOver(
+    bm25ScoredOver(spark, dir,
       Tables.documents(spark, dir)
         .withColumn("lt", lower(col("text")))
         .withColumn("ts", tokens(col("text"))),
       Seq("lang", "n_chars", "text", "lt"))
 
   def ftsBm25(spark: SparkSession, dir: String): DataFrame =
-    bm25ScoredOver(PatternOps.indexedToks(spark, dir)
-        .select(col("doc_id"), col("toks").as("ts")), Nil)
+    bm25ScoredOver(spark, dir, indexedTs(spark, dir), Nil)
       .select(col("doc_id"), col("score"))
       .filter(col("score") > 0)
       .orderBy(col("score").desc, col("doc_id"))

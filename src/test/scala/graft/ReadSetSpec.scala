@@ -118,14 +118,19 @@ class ReadSetSpec extends AnyFunSuite with SparkFixture {
       Seq(operators.GraphOps.graphKhop(spark, SfDir),
         operators.GraphOps.kHop(spark, SfDir, 2),
         operators.GraphOps.graphDependents(spark, SfDir)).map(rows)
+    // the registry's prepared queries over the same memos
+    def registry(name: String) = rows(SparkEntry.queries(name)(spark, SfDir))
+    val prepared = Seq("vec_knn_ivf_probe", "graph_dependents")
     val mem = MemoryStream[(Long, Long)]
     val q = WatchLoop.start(spark, SfDir, mem.toDF().toDF("src", "dst"))
     try {
       val probe = rows(operators.SearchOps.vecKnnIvfProbe(spark, SfDir))
       answers()
+      (prepared :+ "graph_khop").foreach(registry)
       // the query vector and the resident centroids read only the embeddings
       val vectorMemos = Seq("queryVec", "ivfCentroids", "ivfCentroids:resident")
-      def kept() = ("bfs:dependents" +: vectorMemos)
+      val preparedMemos = prepared.map("query:" + _)
+      def kept() = ("bfs:dependents" +: vectorMemos ++: preparedMemos)
         .map(t => PlanCache.lookup(spark, SfDir, t).map(_.asInstanceOf[AnyRef]))
       def hits(before: Seq[Option[AnyRef]]) =
         kept().zip(before).forall { case (x, y) => x.exists(_ eq y.get) }
@@ -136,19 +141,31 @@ class ReadSetSpec extends AnyFunSuite with SparkFixture {
         val part = 990000L + b
         mem.addData((1L, part), (20L + b, part))
         q.processAllAvailable()
-        assert(hits(installed), "the dependents BFS, the query vector and the " +
-          "IVF centroids are hits across an edge batch")
+        assert(PlanCache.lookup(spark, SfDir, "query:graph_khop").isEmpty,
+          "an edge batch drops the prepared graph_khop")
+        assert(hits(installed), "the dependents BFS, the query vector, the " +
+          "IVF centroids and the prepared vector and dependents queries are " +
+          "hits across an edge batch")
         val memo = answers()
         assert(memo.head.contains(s"1,part,$part"), "graph_khop sees the new edge")
+        val khop = registry("graph_khop")
+        assert(khop == memo.head, "the prepared graph_khop sees the new edge")
         assert(rows(operators.SearchOps.vecKnnIvfProbe(spark, SfDir)) == probe)
+        assert(registry("vec_knn_ivf_probe") == probe)
         assert(hits(installed))
         PlanCache.invalidate(SfDir)
         assert(answers() == memo,
           "memoized answers equal the answers after a dir-wide sweep")
-        installed = { operators.SearchOps.vecKnnIvfProbe(spark, SfDir); kept() }
+        assert(registry("graph_khop") == khop,
+          "the prepared graph_khop equals its answer after a dir-wide sweep")
+        installed = {
+          operators.SearchOps.vecKnnIvfProbe(spark, SfDir)
+          prepared.foreach(registry)
+          kept()
+        }
       }
       PlanCache.invalidate(SfDir, s"$SfDir/embeddings.parquet")
-      vectorMemos.foreach { t =>
+      (vectorMemos :+ "query:vec_knn_ivf_probe").foreach { t =>
         assert(PlanCache.lookup(spark, SfDir, t).isEmpty, s"a sweep of the embeddings drops $t")
       }
       assert(PlanCache.lookup(spark, SfDir, "bfs:dependents").nonEmpty,
